@@ -101,17 +101,8 @@ object Bench {
     // optional args restrict the run to named queries (local iteration)
     val picked = if (args.nonEmpty) headline.filter(args.toSet) else headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.build(cpus)
 
     // Warm-up actions so JIT/classloading doesn't bill the first queries.
     // The HOF+md5 pipelines (dedup, similarity) are interpreted-eval paths
@@ -175,9 +166,9 @@ object Bench {
     blackhole ^= spin(50000000L) // JIT-warm the probe loop itself
     val warmed = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
     if (warmed) warmInputs(spark, sfDir)
-    val calPre = calibrate(spark, sfDir, cpus.toInt)
+    val calPre = calibrate(spark, sfDir, cpus)
     val runs = Seq.fill(passes)(pass())
-    val calPost = calibrate(spark, sfDir, cpus.toInt)
+    val calPost = calibrate(spark, sfDir, cpus)
     val results: Seq[(String, Either[String, (Double, Double)])] =
       picked.zipWithIndex.map { case (name, i) =>
         val samples = runs.map(_(i)._2)

@@ -15,8 +15,46 @@ import org.apache.spark.sql.functions._
   * runs ONE query per JVM so no run ever holds two queries' shuffle files
   * on disk at once (q10's alone is tens of GB; see the codec note below).
   * Prints one JSON line {"metric":"groupby_total",...} like graft.Bench.
+  *
+  * The rig GroupByBench and JoinBench share — the session comes from
+  * [[GraftSession]], plus the two operational lessons the N=1e9 runs
+  * taught:
+  * - `SPARK_GRAFT_SHUFFLE_CODEC=zstd` for data-sized shuffles
+  *   ([[shuffleCodec]]): a near-unique-key aggregate or two-sided big join
+  *   writes ~raw-data bytes of shuffle, which outruns one host's scratch
+  *   disk at lz4; zstd roughly halves it. Defaults to lz4 (Spark's
+  *   default) so smaller-N records stay comparable across rounds.
+  * - [[reclaim]] between queries: shuffle files are deleted only when
+  *   their ShuffleDependency is GC'd, and a ~100 GB heap can run 20 query
+  *   executions without a single full GC — at N=1e9 the accumulated
+  *   temp_shuffle files are tens of GB and filled the disk before the
+  *   cleaner ever fired.
   */
 object GroupByBench {
+
+  private[graft] def shuffleCodec: (String, String) =
+    "spark.io.compression.codec" ->
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4")
+
+  private[graft] def reclaim(): Unit = { System.gc(); Thread.sleep(200) }
+
+  /** Select queries by exact name or whole-segment prefix ("q1" matches
+    * q1_sum_by_id1 but NOT q10_sum_count_by_id1_6; "j5" matches
+    * j5_big_inner_id3). Every requested name must match at least one
+    * query — a typo'd name otherwise selects nothing and the tool would
+    * emit a bogus 0-second "result" that scripts grepping for the metric
+    * line record as real (the silent-empty-run footgun). */
+  private[graft] def select[T](all: Seq[(String, T)],
+                               wanted: Seq[String]): Seq[(String, T)] = {
+    def matches(name: String, w: String) =
+      name == w || name.startsWith(w + "_")
+    wanted.foreach { w =>
+      require(all.exists(q => matches(q._1, w)),
+        s"no query matches '$w' — known: ${all.map(_._1).mkString(", ")}")
+    }
+    if (wanted.isEmpty) all
+    else all.filter { case (name, _) => wanted.exists(matches(name, _)) }
+  }
 
   def gen(spark: SparkSession, n: Long, k: Int): DataFrame = {
     val nk = math.max(n / k, 1L)
@@ -61,8 +99,7 @@ object GroupByBench {
     val n = if (args.length > 0) args(0).toDouble.toLong else 10000000L
     val k = if (args.length > 1) args(1).toInt else 100
     val wanted = args.drop(2).toSeq
-    // rig + zstd-vs-lz4 + GC-nudge rationale live in BenchSession
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.cpus(32), shuffleCodec)
 
     // MEMORY_ONLY, not the default MEMORY_AND_DISK: the reference holds the
     // frame in RAM, and at N=1e9 the disk copy (~60 GB raw) plus the run's
@@ -93,8 +130,7 @@ object GroupByBench {
           s"gen shape assert: $c NDV $v outside [0.90×${e.round}, " +
             s"1.10×$domain] — generator defect?")
       }
-    import BenchSession.reclaim
-    def selected = BenchSession.select(queries(df), wanted)
+    def selected = select(queries(df), wanted)
     // warm-up pass then timed pass, min not needed: data is cached
     selected.foreach { case (_, q) =>
       q.write.format("noop").mode("overwrite").save(); reclaim() }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dsl.LazyFrame
+import graft.GroupByBench.{reclaim, select, shuffleCodec}
 
 /** H2O.ai db-benchmark join suite shape (the reference's benchmark family,
   * BASELINE.md): fact table x (N rows) joined against small (N/1e6),
@@ -83,8 +84,7 @@ object JoinBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toDouble.toLong else 10000000L
-    val spark = BenchSession.build()
-    import BenchSession.reclaim
+    val spark = GraftSession.build(GraftSession.cpus(32), shuffleCodec)
 
     val only = args.drop(1).toSeq
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
@@ -135,7 +135,7 @@ object JoinBench {
       "j3_medium_left_id2" -> (() => j(medium.select("id2", "v2"), "id2", "left")),
       "j4_medium_inner_id5" -> (() => j(medium.select("id5", "v2"), "id5")),
       "j5_big_inner_id3" -> (() => j(big, "id3")))
-    val selected = BenchSession.select(queries, only)
+    val selected = select(queries, only)
       .map { case (name, mk) => name -> mk() }
 
     selected.foreach { q =>

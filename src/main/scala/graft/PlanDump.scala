@@ -3,15 +3,14 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for headline queries to plan files.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [query...]
   * Writes <outDir>/<query>_<suffix>.txt for each query (default: the full
-  * Bench.headline list). The session mirrors Bench's exactly so the dumped
-  * plans are the ones the benchmark executes. AQE plans print
+  * Bench.headline list). The session is Bench's (the same factory call),
+  * so the dumped plans are the ones the benchmark executes. AQE plans print
   * `AdaptiveSparkPlan isFinalPlan=false` pre-execution; the static plan
   * shape (Exchanges, join strategies, PushedFilters) is what these files
   * pin, matching what PlanSpec asserts.
@@ -22,17 +21,7 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val picked = if (args.length > 2) args.drop(2).toSeq else Bench.headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
     Files.createDirectories(Paths.get(outDir))
     picked.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

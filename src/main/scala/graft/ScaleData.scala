@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-scale data generator: replicates a driver-provided sf directory
@@ -46,15 +46,7 @@ object ScaleData {
       s"unknown table name(s) ${unknown.mkString(", ")} — valid: " +
         known.toSeq.sorted.mkString(", "))
     def want(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

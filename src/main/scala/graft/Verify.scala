@@ -1,36 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Verify's own confs on top of [[GraftSession]]'s: INT64-micros
+    * timestamps in the dump. Spark's internal timestamps ARE microseconds,
+    * and the INT96 default reads back as timestamp[ns] in arrow while
+    * DuckDB emits timestamp[us] — a cross-engine output-TYPE skew of
+    * exactly the class that hash-failed win_rolling_by_value in r7
+    * (tools/check.py now gates on it). */
+  private[graft] val extraConf: Seq[(String, String)] =
+    Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     // optional: names after sfDir/outDir restrict the dump (local debugging)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64-micros timestamps in the dump: Spark's internal timestamps
-      // ARE microseconds, and the INT96 default reads back as
-      // timestamp[ns] in arrow while DuckDB emits timestamp[us] — a
-      // cross-engine output-TYPE skew of exactly the class that
-      // hash-failed win_rolling_by_value in r7 (tools/check.py now
-      // gates on it)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // TIME dtype keys (dtype_time_native, range_time) need Spark 4.1's
-      // TimeType flag; set at the builder so no query lambda mutates
-      // session state (r14 verdict hygiene item 2)
-      .config("spark.sql.timeType.enabled", "true")
-      // events.parquet may carry TIMESTAMP(NANOS) — read as long, normalized
-      // in queries/util.t (flag must be live at infer+scan time → builder)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(4), extraConf: _*)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

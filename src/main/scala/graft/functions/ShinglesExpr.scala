@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** w-token shingles of a text column as a native expression.
   *
-  * Byte-identical to the Column composition in [[graft.text.Dedup.shinglesHof]]
+  * Byte-identical to the Column composition in
+  * `graft.Reference.shinglesHof` (src/test)
   * {{{
   *   toks = filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
   *   when(size(toks) >= w,

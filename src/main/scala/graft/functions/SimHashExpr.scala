@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SimHash signature as a native expression — byte-identical to the HOF
-  * formulation in [[graft.text.Dedup.simhashHof]]: distinct whitespace
-  * tokens of the lower/trimmed text, per-token 32-bit hash from the first
-  * 8 hex chars of md5, signed ±1 votes per bit position, bit set where the
-  * vote sum is positive.
+  * formulation `graft.Reference.simhashHof` (src/test): distinct
+  * whitespace tokens of the lower/trimmed text, per-token 32-bit hash from
+  * the first 8 hex chars of md5, signed ±1 votes per bit position, bit set
+  * where the vote sum is positive.
   *
   * The HOF tree evaluates `bits` separate interpreted `aggregate` passes
   * over the token-hash array (16 × n lambda frames per document); this

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The shared whitespace token convention as a native expression.
   *
   * Byte-identical to the Column composition in
-  * [[graft.text.TextAnalysis.tokensHof]]
+  * `graft.Reference.tokensHof` (src/test)
   * {{{
   *   filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
   * }}}

@@ -447,15 +447,12 @@ package object functions {
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
 
   /** Cosine similarity in ONE fused native loop (dot + both norms) instead
-    * of three HOF passes; bit-identical to [[cosineSimilarityHof]]. */
+    * of three HOF passes; bit-identical to `dotProductHof(a, b) /
+    * (l2Norm(a) * l2Norm(b))`. */
   def cosineSimilarity(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(CosineSimilarityExpr(Bridge.expression(a), Bridge.expression(b)))
   }
-
-  /** Reference HOF formulation of [[cosineSimilarity]]. */
-  def cosineSimilarityHof(a: Column, b: Column): Column =
-    dotProductHof(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Grouped top-k values with k-bounded state (native [[TopKAgg]], a
     * TypedImperativeAggregate): `df.groupBy(g).agg(topKAgg(col, 5))` — the
@@ -509,8 +506,9 @@ package object functions {
 
   /** The shared whitespace token convention as a native one-pass kernel
     * (lowercase → split on `\s+` → drop empties; [[TokensExpr]]).
-    * Byte-identical to [[graft.text.TextAnalysis.tokensHof]], which is the
-    * reference formulation the equivalence spec pins. */
+    * Byte-identical to the reference formulation
+    * `graft.Reference.tokensHof` (src/test), which the equivalence spec
+    * pins. */
   def tokens(text: Column): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(TokensExpr(Bridge.expression(text)))

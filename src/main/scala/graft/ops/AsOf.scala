@@ -44,9 +44,14 @@ object AsOf {
     *
     * `leftCols` / `rightCols` define each side's frame as (name, expr over
     * `src`) pairs, exactly the `.select` the caller would have passed to
-    * `join`; `leftWhen` / `rightWhen` MUST be disjoint (a row satisfying
-    * both would need to appear on both sides — use `join` for that) and
-    * rows satisfying neither are dropped. Row-for-row equal to
+    * `join`. Rows satisfying neither predicate are dropped. The two
+    * predicates are meant to be disjoint, and overlap is NOT checked: a
+    * row satisfying both becomes a LEFT row only (the projection tests
+    * `leftWhen` first), so it is never a right-side match candidate — not
+    * for other left rows, not for itself — where `join` over the two
+    * filtered frames would put it on both sides. Use `join` when the
+    * slices can overlap (pinned in AsOfSpec). For disjoint predicates the
+    * result is row-for-row equal to
     * {{{
     *   join(src.filter(leftWhen).select(leftCols...),
     *        src.filter(rightWhen).select(rightCols...), ...)

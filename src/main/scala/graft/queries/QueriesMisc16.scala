@@ -62,8 +62,8 @@ object QueriesMisc16 {
     // hash canonicalization has no TIME lane. Supersedes the i64-ns-carrier
     // contract of `dtype_time_ns` (kept: it pins the ns arithmetic).
     "dtype_time_native" -> ((s, d) => {
-      // Spark 4.1 ships TimeType behind a flag; it is enabled in every
-      // session BUILDER that runs keys (Verify, BenchSession, TestSpark) —
+      // Spark 4.1 ships TimeType behind a flag; it is enabled by the one
+      // session factory that runs keys (graft.GraftSession) —
       // NOT mutated here: a conf.set inside a query lambda would leave
       // cross-key global state behind (r14 verdict hygiene item 2).
       t(s, d, "events")

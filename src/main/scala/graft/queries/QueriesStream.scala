@@ -158,7 +158,7 @@ object QueriesStream {
     // PLUS the clicks that never converted — emitted null-padded once the
     // global watermark proves no purchase can still arrive. The emission
     // cutoff is Spark's state-value watermark, pinned by
-    // graft.testing.StreamJoinProbe: an unmatched click pads iff
+    // StreamJoinSemanticsSpec: an unmatched click pads iff
     // click_ts_us <= (wmF_ms - upper_ms - 1) * 1000, where wmF =
     // min(floor_ms(max click ts), floor_ms(max purchase ts)) - delay —
     // the oracle models exactly that, so the key pins both the pair set

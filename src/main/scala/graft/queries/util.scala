@@ -16,9 +16,10 @@ object util {
     *
     * `spark.sql.legacy.parquet.nanosAsLong` is required for the NANOS form
     * and must be live at schema-inference AND scan time, so it belongs to
-    * the SESSION BUILDER (Verify, TestSpark, Bench, BenchSession, probes) —
-    * never set here: a conf.set inside the query path is hidden cross-key
-    * session mutation (r14 verdict hygiene item 2). */
+    * the session factory ([[graft.GraftSession]], which every main and
+    * the test suite's TestSpark go through) — never set here: a conf.set
+    * inside the query path is hidden cross-key session mutation (r14
+    * verdict hygiene item 2). */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       val raw = s.read.parquet(s"$dir/$name.parquet")

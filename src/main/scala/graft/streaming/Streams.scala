@@ -91,7 +91,7 @@ object Streams {
     * when `wm` passes `ts + upper` (for a right row: `ts + lower`).
     * Spark's exact emission cutoff is `ts_us <= (wm_ms - bound_ms - 1ms)`
     * (StreamingJoinHelper computes the state value watermark in whole ms
-    * minus a 1 ms safety margin; pinned by graft.testing.StreamJoinProbe
+    * minus a 1 ms safety margin; pinned by StreamJoinSemanticsSpec
     * on this build), so rows still inside the horizon when the stream
     * idles stay buffered rather than emitting — the semantics a click-
     * without-purchase / impressions-without-clicks pipeline relies on. */

@@ -3,7 +3,7 @@ package graft.testing
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Plan-shape sweep over the WHOLE declared-query inventory (r21 opt round):
   * plans every SparkEntry key (no execution) and emits one CSV row per key
@@ -20,20 +20,22 @@ import org.apache.spark.sql.SparkSession
   * pinned by the streaming specs instead.
   */
 object PlanSweep {
+
+  private val FilterOp = """[ :]*(?:[+:]- )?(?:\*\(\d+\) )?Filter .*""".r
+
+  /** Whether one line of `executedPlan.toString` is a Filter OPERATOR, at
+    * any depth of the tree: the prefix is any run of the tree's `:` and
+    * space continuation columns, then one `+- ` / `:- ` marker (a filter
+    * under a join's left branch prints as `:     +- *(1) Filter ...`).
+    * Lines that merely contain the substring — every scan line carries
+    * `PushedFilters: [...]` — do not count. */
+  def isFilterOp(line: String): Boolean = FilterOp.matches(line)
+
   def main(args: Array[String]): Unit = {
     val outCsv = if (args.length > 0) args(0) else "/tmp/plan_sweep.csv"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus(8),
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder(
@@ -49,14 +51,10 @@ object PlanSweep {
         def c(p: String) = lines.count(_.contains(p))
         // scans that push nothing while the plan filters somewhere —
         // candidate missed pushdowns, reviewed by hand from the CSV.
-        // ADVICE r21: count Filter OPERATORS, not lines containing the
-        // substring "Filter" (every scan line carries "PushedFilters: ...",
-        // which made the old guard always-true).
         val scans = c("FileScan parquet")
         val pushedScans = lines.count(l =>
           l.contains("PushedFilters: [") && !l.contains("PushedFilters: []"))
-        val filterOps = lines.count(
-          _.matches("""\s*(?:[+:]- )?(?:\*\(\d+\) )?Filter .*"""))
+        val filterOps = lines.count(isFilterOp)
         val unpushed =
           if (filterOps > 0 && scans > 0) scans - pushedScans else 0
         val wideScans = lines.count { l =>

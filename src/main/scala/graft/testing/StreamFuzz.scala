@@ -125,8 +125,8 @@ import graft.streaming.Streams
   * Extends v3 with a drawn joinType ∈ {inner, leftOuter, rightOuter,
   * fullOuter} and a drawn fraction of ONE side's rows relocated 1–3 files
   * forward (v2-style), so the interval join sees genuinely late rows. The
-  * oracle models the semantics pinned by [[StreamJoinProbe]] on this
-  * build (each clause probe-verified before the grammar was written):
+  * oracle models the semantics pinned by StreamJoinSemanticsSpec on this
+  * build (each clause measured before the grammar was written):
   *
   *  - LATE FILTER (both input sides): a row in batch b is dropped iff
   *    ts_us <= wm(b−1)_ms · 1000 (raw event time, INCLUSIVE; the same

@@ -1,6 +1,6 @@
 package graft.testing
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Long-horizon StreamFuzz soak runner — the streaming twin of [[FuzzSoak]]
   * (the spec sweeps are the per-commit gate; this main extends the search
@@ -30,18 +30,12 @@ object StreamFuzzSoak {
       s"SPARK_GRAFT_STATE_PROVIDER must be default|rocksdb, got '$provider' " +
         "— a typo here would silently soak the default provider while the " +
         "evidence line records the misspelled name")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+    val rocksdb =
+      if (provider == "rocksdb") Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+      else Nil
+    val spark = GraftSession.build(GraftSession.cpus(4),
+      Seq("spark.sql.extensions" -> "graft.GraftExtensions") ++ rocksdb: _*)
     spark.sparkContext.setLogLevel("ERROR")
 
     var failures = 0L

@@ -21,26 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // the HOF split, NOT the native kernel: this feeds only the *Hof
-  // reference formulations below, whose whole point is to pin the native
-  // expressions against an independently-evaluated Column composition
-  private def tokens(text: Column): Column = TextAnalysis.tokensHof(text)
-
   /** w-token shingles of a text column — native one-pass expression
-    * ([[graft.functions.ShinglesExpr]]); byte-identical to [[shinglesHof]]. */
+    * ([[graft.functions.ShinglesExpr]]); byte-identical to the reference
+    * Column composition `graft.Reference.shinglesHof` (src/test). */
   def shingles(text: Column, w: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.ShinglesExpr(Bridge.expression(text), w))
-  }
-
-  /** Reference formulation of [[shingles]] as pure Column composition —
-    * kept for the equivalence spec and as documentation of the semantics. */
-  def shinglesHof(text: Column, w: Int): Column = {
-    val toks = tokens(text)
-    val n = size(toks)
-    when(n >= w,
-      transform(sequence(lit(0), n - w), i => array_join(slice(toks, i + 1, lit(w)), " ")))
-      .otherwise(array(array_join(toks, " ")))
   }
 
   /** MinHash signature: k permutations approximated by min(md5(i || shingle))
@@ -55,19 +41,12 @@ object Dedup {
     *
     * Evaluated by the native codegen expression [[graft.functions.MinHashMd5]]
     * (one JVM loop, stays inside WholeStageCodegen); byte-identical to
-    * [[signatureFromShinglesHof]], which is the spec/oracle formulation. */
+    * the reference formulation
+    * `graft.Reference.signatureFromShinglesHof` (src/test). */
   def signatureFromShingles(sh: Column, k: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.MinHashMd5(Bridge.expression(sh), k))
   }
-
-  /** Reference formulation of [[signatureFromShingles]] as pure Column
-    * composition (interpreted higher-order functions) — kept for the
-    * equivalence spec and as documentation of the exact semantics. */
-  def signatureFromShinglesHof(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(sh,
-        s => md5(concat(i.cast("string"), lit(":"), s)))))
 
   /** LSH banding: signature (length k) → b bands of r rows, hashed. */
   def bands(signature: Column, b: Int, r: Int): Column =
@@ -254,10 +233,13 @@ object Dedup {
     * limit — the verify joins carry the FULL corpus-shingle projection,
     * and once it dwarfs execution memory those joins spill while
     * `rescan`'s candidate-semi-filtered verify touches only ~12% of docs.
-    * Bracketing measurements (DedupVerifyProbe, this host, 2 GB budget):
-    * at 1.3× budget (sf10) recompute beat rescan 4.91 vs 6.29 s; at 13×
-    * (sf100) it lost 35.2 vs 28.1 s. The switch sits at the geometric
-    * midpoint 4× — re-probe to narrow it if a workload lands between. */
+    * Bracketing measurements (SCALE.md, "Round-22 additions",
+    * verify-strategy scale map; 2 GB budget): at 1.3× budget (sf10)
+    * recompute beat rescan 4.91 vs 6.29 s; at 13× (sf100) it lost 35.2 vs
+    * 28.1 s. The switch sits at the geometric midpoint 4×. The probe that
+    * measured it, `graft.testing.DedupVerifyProbe`, is in commit 38e36ee;
+    * re-run it from there to narrow the switch if a workload lands
+    * between. */
   private val RecomputeBudgetFactor = 4L
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -302,10 +284,10 @@ object Dedup {
     * force `rescan` as if it were a measurement; it still resolves to
     * `rescan` — the bounded-state shape is the safe call for an
     * unknown-size input — but the choice is logged). Below the line,
-    * `auto` resolves to `recompute` since r22: DedupVerifyProbe measured
-    * recompute faster than the `cached` persist it replaced at every SF
+    * `auto` resolves to `recompute` since r22: recompute measured faster than the `cached` persist it replaced at every SF
     * where either fits (sf0.1: 0.795 vs 0.821 s; sf10: 4.91 vs 6.40 s,
-    * 1.30×) — the corpus-shingle persist costs more to build and hold
+    * 1.30×; SCALE.md "Round-22 additions", probe at commit 38e36ee) — the
+    * corpus-shingle persist costs more to build and hold
     * than the shingle kernels cost to re-run now that they are
     * allocation-free byte loops (r21). The recompute↔rescan crossover is
     * measured on [[RecomputeBudgetFactor]]. */
@@ -388,10 +370,11 @@ object Dedup {
     *    extra jobs, zero storage footprint. Since the shingle/minhash
     *    kernels became allocation-free byte loops (r21), re-running them
     *    is cheaper than building + holding the corpus-shingle cache:
-    *    DedupVerifyProbe measured recompute vs cached 0.795 vs 0.821 s at
-    *    sf0.1 and 4.91 vs 6.40 s (1.30×) at sf10. The input is scanned
-    *    three times — pass a directly scannable frame, or persist `df`
-    *    yourself if it is an expensive derivation.
+    *    recompute vs cached measured 0.795 vs 0.821 s at sf0.1 and 4.91 vs
+    *    6.40 s (1.30×) at sf10 (SCALE.md "Round-22 additions"; the probe
+    *    is `graft.testing.DedupVerifyProbe` at commit 38e36ee). The input
+    *    is scanned three times — pass a directly scannable frame, or
+    *    persist `df` yourself if it is an expensive derivation.
     *  - `verify = "cached"` (r12): persist the corpus (id, shingles)
     *    projection MEMORY_AND_DISK and join the verify sides back to it —
     *    a single action with no extra job launches, but the cache is ~50×
@@ -400,13 +383,18 @@ object Dedup {
     *    `recompute` even where it fits (the build + memory pressure cost
     *    more than the re-derivation). Kept for callers whose input frame
     *    is itself expensive to recompute.
-    *  - `verify = "auto"` (default): `rescan` when the estimated cache
-    *    footprint exceeds a quarter of the storage budget ([[pickVerify]]:
-    *    `spark.executor.memory` × `spark.memory.fraction` when set — the
-    *    conf-driven cluster path — else the local JVM heap), or when the
-    *    input has no usable optimizer stats (logged; pass the mode
-    *    explicitly for known-small derived inputs); `recompute` below it
-    *    (r22 — previously `cached`; same results, measured faster).
+    *  - `verify = "auto"` (default): `rescan` when the estimated
+    *    corpus-shingle footprint (optimizer-stats input bytes ×
+    *    [[ShingleInflation]]) exceeds [[RecomputeBudgetFactor]] (4) × the
+    *    storage budget ([[pickVerify]]). The budget is itself already
+    *    quartered — `spark.executor.memory` × `spark.memory.fraction` / 4
+    *    when those are set (the conf-driven cluster path), else the local
+    *    JVM max heap / 4 — so the switch falls where the footprint passes
+    *    executor memory × fraction, or the whole local heap. Also `rescan`
+    *    when the input has no usable optimizer stats (logged; pass the
+    *    mode explicitly for known-small derived inputs); `recompute` below
+    *    the switch (r22 — previously `cached`; same results, measured
+    *    faster).
     *
     * `parallelism` > 0 fans an under-partitioned input out to that many
     * tasks before the CPU-bound shingle/hash stages (see [[shingled]]);
@@ -601,28 +589,11 @@ object Dedup {
   }
 
   /** SimHash: per-distinct-token signed bit votes — native one-pass
-    * expression ([[graft.functions.SimHashExpr]]); byte-identical to
-    * [[simhashHof]]. */
+    * expression ([[graft.functions.SimHashExpr]]); byte-identical to the
+    * reference formulation `graft.Reference.simhashHof` (src/test). */
   def simhash(text: Column, bits: Int = 16): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.SimHashExpr(Bridge.expression(text), bits))
-  }
-
-  /** Reference formulation of [[simhash]] as pure Column composition:
-    * for each bit position, sum signed votes over token hashes. */
-  def simhashHof(text: Column, bits: Int = 16): Column = {
-    val toks = array_distinct(tokens(text))
-    // token → int hash from first 8 hex chars of md5
-    val th = transform(toks, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-    // shiftright/shiftleft builtins take an Int literal; inside a lambda the
-    // shift amount is a Column, so go through call_function.
-    val bitVotes = transform(sequence(lit(0), lit(bits - 1)), i =>
-      when(aggregate(th, lit(0L),
-        (acc, h) => acc + when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1L,
-          lit(1L)).otherwise(lit(-1L))
-      ) > 0, lit(1L)).otherwise(lit(0L)))
-    aggregate(zip_with(bitVotes, sequence(lit(0), lit(bits - 1)),
-      (bit, i) => call_function("shiftleft", bit, i)), lit(0L), (acc, v) => acc + v)
   }
 
   /** Hamming distance between two simhash values. */

@@ -17,28 +17,17 @@ object TextAnalysis {
     * ([[graft.functions.TokensExpr]] over the same scanner the shingle
     * path adopted in r21) — the Column composition went through Spark's
     * `StringSplit`, which pays a full UTF-16 decode and a `Pattern.compile`
-    * PER ROW. Byte-identical to [[tokensHof]] for valid UTF-8 input (the
+    * PER ROW. Byte-identical to the reference Column composition
+    * `graft.Reference.tokensHof` (src/test) for valid UTF-8 input (the
     * scanner's `\s` ≡ ASCII-whitespace argument is on
     * [[graft.functions.ShingleUtil.tokens]]); pinned by TokensExprSpec. */
   def tokens(text: Column): Column = graft.functions.tokens(text)
 
-  /** Reference formulation of [[tokens]] as pure Column composition —
-    * kept for the equivalence spec and as documentation of the exact
-    * split semantics. */
-  def tokensHof(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
-
   /** Whitespace token count. Empty/blank text → 0. Native one-pass
-    * ([[graft.functions.textStats]]); [[tokenCountRegex]] is the reference
-    * formulation. */
+    * ([[graft.functions.textStats]]); `graft.Reference.tokenCountRegex`
+    * (src/test) is the reference formulation. */
   def tokenCount(text: Column): Column =
     graft.functions.textStats(text).getField("n_tokens")
-
-  /** Reference formulation of [[tokenCount]] — kept for the equivalence
-    * spec and as documentation of the exact split semantics. */
-  def tokenCountRegex(text: Column): Column =
-    when(trim(text) === "", lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
 
   /** BPE-ish subword count: alnum runs + individual punctuation marks — a
     * cheap, deterministic proxy for tokenizer counts (≈ GPT-style regex
@@ -48,13 +37,15 @@ object TextAnalysis {
 
   /** Stopword hit ratio over a given stopword list — building block for
     * language-ID and quality scoring. */
-  // r22: tokens() (empties dropped) replaces the bare split (empties kept).
-  // Ratio-identical: an empty string is never a stopword, so hits agree; the
-  // only input where the two token counts differ is blank/whitespace-only
-  // text (split gives [""] = size 1, tokens gives size 0) and there
-  // greatest(_, 1) pins both denominators to 1 with hits 0. Null text stays
-  // null through both (split/tokens of null are null). Removes 4 per-row
-  // Pattern.compiles from langId.
+  // r22: tokens() (empties dropped) replaces the bare split (empties kept),
+  // removing 4 per-row Pattern.compiles from langId. Hits agree (an empty
+  // string is never a stopword), but the denominator does not wherever
+  // whitespace other than a space leads or trails the text: `trim` strips
+  // spaces only, so the old split kept an empty token there. Observed:
+  // "\tthe cat" and "the cat\n" were 1/3 and are 1/2; " \tthe cat \n" was
+  // 0.25 and is 0.5. Blank text gives 0 and null gives null either way.
+  // Pinned in TokensExprSpec; which semantics is right is open in ROADMAP.md,
+  // and the text_langid oracle SQL still mirrors the old split.
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)
     val hits = size(filter(toks, t => t.isin(stopwords.map(lit(_).cast("string")): _*)))
@@ -95,25 +86,6 @@ object TextAnalysis {
     val toks = greatest(st.getField("n_tokens"), lit(1)).cast("double")
     val alpha = st.getField("n_alpha").cast("double") / greatest(n, lit(1.0))
     val punct = st.getField("n_punct").cast("double") / greatest(n, lit(1.0))
-    val meanWordLen = n / toks
-    val lenScore = when(n < 10, lit(0.0)).when(n > 20000, lit(0.3)).otherwise(lit(1.0))
-    val punctScore = when(punct > 0.2, lit(0.0)).otherwise(lit(1.0) - punct)
-    val wordLenScore = when(meanWordLen.between(2.0, 12.0), lit(1.0)).otherwise(lit(0.2))
-    // scaled-integer rounding: round(x*10000)/10000 instead of round(x, 4).
-    // Spark rounds via the double's DECIMAL string (BigDecimal HALF_UP),
-    // DuckDB via std::round on the BINARY scaled double - at half-way
-    // boundaries they disagree (~0.2% of docs at sf0.1). Rounding the
-    // scaled value to an integer is exact in both engines.
-    round((lenScore * 0.3 + alpha * 0.3 + punctScore * 0.2 + wordLenScore * 0.2) * 10000, 0) / 10000
-  }
-
-  /** Reference formulation of [[qualityScore]] over the regex counts —
-    * kept for the equivalence spec (the oracle SQL mirrors this). */
-  def qualityScoreRegex(text: Column): Column = {
-    val n = length(text).cast("double")
-    val toks = greatest(tokenCountRegex(text), lit(1)).cast("double")
-    val alpha = length(regexp_replace(text, "[^A-Za-z]", "")).cast("double") / greatest(n, lit(1.0))
-    val punct = length(regexp_replace(text, "[^.,;:!?]", "")).cast("double") / greatest(n, lit(1.0))
     val meanWordLen = n / toks
     val lenScore = when(n < 10, lit(0.0)).when(n > 20000, lit(0.3)).otherwise(lit(1.0))
     val punctScore = when(punct > 0.2, lit(0.0)).otherwise(lit(1.0) - punct)

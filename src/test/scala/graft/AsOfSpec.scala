@@ -212,6 +212,28 @@ class AsOfSpec extends SparkSpec {
     }
   }
 
+  test("joinSliced: a row matching both predicates is a left row only") {
+    // row 3 satisfies leftWhen (k >= 8) AND rightWhen (kind = error): the
+    // one-scan union keeps it once, on the left, so no left row can match
+    // it. The two-frame join puts it on both sides and both left rows
+    // match it instead of row 2.
+    val src = Seq((1L, "click", 0L, 10L, 1), (2L, "error", 0L, 4L, 2),
+      (3L, "error", 0L, 8L, 3)).toDF("id", "kind", "g", "k", "v")
+    val lSel = Seq("id" -> col("id"), "g" -> col("g"), "k" -> col("k"))
+    val rSel = Seq("g" -> col("g"), "rk" -> col("k"), "rv" -> col("v"))
+    val (leftWhen, rightWhen) = (col("k") >= 8L, col("kind") === "error")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "rk").as[(Long, Long)].collect().toSeq.sorted
+    val sliced = pairs(AsOf.joinSliced(src, leftWhen, lSel, rightWhen, rSel,
+      "k", "rk", Seq("g"), "backward", None))
+    assert(sliced == Seq((1L, 4L), (3L, 4L)))
+    val twoFrame = pairs(AsOf.join(
+      src.filter(leftWhen).select(lSel.map { case (n, c) => c.as(n) }: _*),
+      src.filter(rightWhen).select(rSel.map { case (n, c) => c.as(n) }: _*),
+      "k", "rk", Seq("g"), "backward", None))
+    assert(twoFrame == Seq((1L, 8L), (3L, 8L)))
+  }
+
   test("duplicate right keys carry a deterministic value (r14 tie-break contract)") {
     // three right rows share (g, rk) and differ only in payload: the
     // contract pins the carried value to the GREATEST payload (backward) /

@@ -26,7 +26,7 @@ class MinHashExprSpec extends SparkSpec {
     val both = sh.select(
       col("doc_id"),
       Dedup.signatureFromShingles(col("sh"), 8).as("native"),
-      Dedup.signatureFromShinglesHof(col("sh"), 8).as("hof"))
+      Reference.signatureFromShinglesHof(col("sh"), 8).as("hof"))
     val rows = both.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -45,7 +45,7 @@ class MinHashExprSpec extends SparkSpec {
         |AS t(id, sh)""".stripMargin)
     val both = df.select(col("id"),
       Dedup.signatureFromShingles(col("sh"), 4).as("native"),
-      Dedup.signatureFromShinglesHof(col("sh"), 4).as("hof"))
+      Reference.signatureFromShinglesHof(col("sh"), 4).as("hof"))
     both.collect().foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null-ness mismatch id=${r.getInt(0)}")
       if (!r.isNullAt(1))
@@ -67,7 +67,7 @@ class MinHashExprSpec extends SparkSpec {
       .toDF("id", "sh")
     val both = df.select(col("id"),
       Dedup.signatureFromShingles(col("sh"), 8).as("native"),
-      Dedup.signatureFromShinglesHof(col("sh"), 8).as("hof"))
+      Reference.signatureFromShinglesHof(col("sh"), 8).as("hof"))
     both.collect().foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),
         s"mismatch for id=${r.getLong(0)}")

@@ -1,0 +1,80 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.sql.internal.SQLConf
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards for the one session factory ([[GraftSession]]): no other file
+  * under `src/` builds a session, and the mains whose records are compared
+  * across rounds (`Bench`, `Verify`) run under exactly the confs they ran
+  * under before the factory existed. */
+class SessionSpec extends AnyFunSuite {
+
+  /** The repository root: the nearest directory at or above the working
+    * directory that holds `build.sbt`. */
+  private def repoRoot: Path =
+    Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .find(d => Files.exists(d.resolve("build.sbt")))
+      .getOrElse(fail("no build.sbt at or above the working directory"))
+
+  test("SparkSession is built only in the factory") {
+    val needle = "." + "builder()" // split so this file is not a hit itself
+    val src = repoRoot.resolve("src")
+    val hits = Files.walk(src).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex
+          .filter(_._1.contains(needle))
+          .map { case (_, i) => s"${src.relativize(p)}:${i + 1}" }
+      }.toList
+    assert(hits.size == 1 &&
+      hits.head.startsWith("main/scala/graft/GraftSession.scala:"), hits)
+  }
+
+  /** Each key's effective value under `pairs`: the pair's value when set,
+    * else Spark's default for a SQL conf, else "<unset>". */
+  private def effective(pairs: Seq[(String, String)],
+                        keys: Set[String]): Map[String, String] = {
+    val conf = new SQLConf
+    pairs.foreach { case (k, v) => conf.setConfString(k, v) }
+    keys.map(k => k -> Try(conf.getConfString(k)).getOrElse("<unset>")).toMap
+  }
+
+  private def assertSameEffective(now: Seq[(String, String)],
+                                  before: Seq[(String, String)]): Unit = {
+    val keys = (now ++ before).map(_._1).toSet
+    assert(effective(now, keys) == effective(before, keys))
+  }
+
+  // the builder calls of Bench and Verify as they stood before the factory
+  private def benchBefore(cpus: Int) = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.timeType.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  private def verifyBefore(cpus: Int) = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.sql.timeType.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  test("Bench and Verify sessions keep their effective confs") {
+    for (cpus <- Seq(4, 32)) {
+      assertSameEffective(GraftSession.conf(cpus), benchBefore(cpus))
+      assertSameEffective(GraftSession.conf(cpus, Verify.extraConf: _*),
+        verifyBefore(cpus))
+    }
+  }
+}

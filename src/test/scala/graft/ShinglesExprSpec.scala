@@ -11,7 +11,7 @@ class ShinglesExprSpec extends SparkSpec {
     val docs = util.t(spark, "/root/testdata/sf0.001", "documents")
     val both = docs.select(col("doc_id"),
       Dedup.shingles(col("text"), 3).as("native"),
-      Dedup.shinglesHof(col("text"), 3).as("hof"))
+      Reference.shinglesHof(col("text"), 3).as("hof"))
     val rows = both.collect()
     assert(rows.length > 0)
     rows.foreach { r =>
@@ -35,7 +35,7 @@ class ShinglesExprSpec extends SparkSpec {
     Seq(1, 2, 3).foreach { w =>
       df.select(col("id"),
         Dedup.shingles(col("s"), w).as("native"),
-        Dedup.shinglesHof(col("s"), w).as("hof"))
+        Reference.shinglesHof(col("s"), w).as("hof"))
         .collect().foreach { r =>
           assert(r.getSeq[String](1) == r.getSeq[String](2),
             s"mismatch id=${r.getInt(0)} w=$w: " +

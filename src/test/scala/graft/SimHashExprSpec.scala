@@ -11,7 +11,7 @@ class SimHashExprSpec extends SparkSpec {
     val docs = util.t(spark, "/root/testdata/sf0.001", "documents")
     val rows = docs.select(col("doc_id"),
       Dedup.simhash(col("text")).as("native"),
-      Dedup.simhashHof(col("text")).as("hof")).collect()
+      Reference.simhashHof(col("text")).as("hof")).collect()
     assert(rows.length > 0)
     rows.foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"mismatch doc_id=${r.getLong(0)}")
@@ -28,7 +28,7 @@ class SimHashExprSpec extends SparkSpec {
     Seq(8, 16, 32).foreach { bits =>
       df.select(col("id"),
         Dedup.simhash(col("s"), bits).as("native"),
-        Dedup.simhashHof(col("s"), bits).as("hof"))
+        Reference.simhashHof(col("s"), bits).as("hof"))
         .collect().foreach { r =>
           assert(r.getLong(1) == r.getLong(2), s"mismatch id=${r.getInt(0)} bits=$bits")
         }

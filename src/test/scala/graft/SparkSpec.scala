@@ -6,20 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      // the whole suite runs with graft's extensions active, proving the
-      // spark.sql.extensions entry point end-to-end
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test/warehouse")
-      // TIME dtype keys run in the ContractSpec sweep; the flag lives in
-      // the builder so no query lambda mutates session state
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the whole suite runs with graft's extensions active, proving the
+    // spark.sql.extensions entry point end-to-end
+    val s = GraftSession.build(4,
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.warehouse.dir" -> "/tmp/graft_test/warehouse")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

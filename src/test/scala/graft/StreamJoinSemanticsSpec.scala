@@ -12,9 +12,11 @@ import graft.streaming.Streams
 import graft.testing.StreamFuzz
 
 /** Hand-pinned stream-stream join semantics on THIS Spark build — the
-  * clauses the v4 fuzz oracle (StreamFuzz.runJoinV2Case) models, each
-  * first established by graft.testing.StreamJoinProbe and frozen here as a
-  * regression gate:
+  * clauses the v4 fuzz oracle (StreamFuzz.runJoinV2Case) models, frozen
+  * here as a regression gate. This spec is the reference for them; the
+  * probe that first measured them (`graft.testing.StreamJoinProbe`, commit
+  * 412b471) is retired, and every scenario it printed is one of the
+  * pinned timelines below:
   *
   *  1. OUTER pad cutoff: an unmatched row is null-padded iff
   *     ts_us <= (wmF_ms − bound_ms − 1) · 1000, INCLUSIVE to the exact
@@ -163,5 +165,143 @@ class StreamJoinSemanticsSpec extends SparkSpec {
       joinType = "leftOuter", delay = "60 minutes",
       lower = "0 seconds", upper = "30 minutes")
     assert(got == Set((10L, -1L), (11L, -1L), (12L, 20L)))
+  }
+
+  // ---- the remaining probe timelines, each pinned at its observed output.
+  // Shorthand: wmF = the final global watermark; a row pads iff
+  // ts <= wmF - bound - 1ms (clause 1), and a late row drops iff
+  // ts <= wm(b-1) (clause 2).
+
+  test("leftOuter boundary: 1us past the whole-ms cutoff stays buffered") {
+    // wmF = 95:00 -> cutoff 84:59.999; 84:59.999999 and 85:00 stay buffered
+    val got = run(
+      left = Seq(Seq((tsm(50), 1L, 10L), (tsm(80), 1L, 11L),
+        (tsm(84, 59999999L), 1L, 12L), (tsm(85), 1L, 13L),
+        (tsm(85, 1), 1L, 14L), (tsm(105), 98L, 15L))),
+      right = Seq(Seq((tsm(55), 1L, 20L), (tsm(120), 99L, 21L))),
+      joinType = "leftOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "10 minutes")
+    assert(got == Set((10L, 20L), (11L, -1L)))
+  }
+
+  test("rightOuter boundary: a right row closes at r_ts + lower") {
+    // lower 10m, wmF = 95:00 -> right cutoff 84:59.999
+    val got = run(
+      left = Seq(Seq((tsm(55), 1L, 10L), (tsm(120), 99L, 11L))),
+      right = Seq(Seq((tsm(50), 1L, 20L), (tsm(80), 1L, 21L),
+        (tsm(85), 1L, 22L), (tsm(85, 1), 1L, 23L), (tsm(105), 98L, 24L))),
+      joinType = "rightOuter", delay = "10 minutes",
+      lower = "10 minutes", upper = "0 seconds")
+    assert(got == Set((10L, 20L), (-1L, 21L)))
+  }
+
+  test("fullOuter boundary: each side pads against its own bound") {
+    // wmF = 95:00: left cutoff 84:59.999 (upper 10m), right 94:59.999
+    val got = run(
+      left = Seq(Seq((tsm(50), 1L, 10L), (tsm(80), 1L, 11L),
+        (tsm(105), 98L, 12L))),
+      right = Seq(Seq((tsm(55), 1L, 20L), (tsm(70), 2L, 21L),
+        (tsm(120), 99L, 22L))),
+      joinType = "fullOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "10 minutes")
+    assert(got == Set((10L, 20L), (11L, -1L), (-1L, 21L)))
+  }
+
+  test("pad grid below a whole-ms cutoff: every row pads") {
+    // wmF = 95:00 -> cutoff 84:59.999; all four rows are at or below it
+    val got = run(
+      left = Seq(Seq((tsm(84, 58999999L), 1L, 10L),
+        (tsm(84, 59000000L), 1L, 11L), (tsm(84, 59000001L), 1L, 12L),
+        (tsm(84, 59500000L), 1L, 13L), (tsm(105), 98L, 14L))),
+      right = Seq(Seq((tsm(120), 99L, 20L))),
+      joinType = "leftOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "10 minutes")
+    assert(got == Set((10L, -1L), (11L, -1L), (12L, -1L), (13L, -1L)))
+  }
+
+  test("pad grid under a fractional-ms watermark: every row pads") {
+    // wmF = 95:00.250 -> cutoff 85:00.249; rows around 84:59.25 and
+    // around 85:00.000 are all below it
+    for (rows <- Seq(
+           Seq(59249999L, 59250000L, 59250001L).map(tsm(84, _)),
+           Seq(tsm(84, 59999999L), tsm(85, 0L), tsm(85, 1L)))) {
+      val got = run(
+        left = Seq(rows.zipWithIndex.map { case (t, i) => (t, 1L, 10L + i) } :+
+          ((tsm(105, 250000L), 98L, 13L))),
+        right = Seq(Seq((tsm(120), 99L, 20L))),
+        joinType = "leftOuter", delay = "10 minutes",
+        lower = "0 seconds", upper = "10 minutes")
+      assert(got == Set((10L, -1L), (11L, -1L), (12L, -1L)), rows)
+    }
+  }
+
+  test("late filter of batch 1 uses wm(0) = epoch: nothing drops") {
+    // two files per side: batch 1 filters against wm(0) = epoch, so its
+    // late rows (55 / 60 / 85 / 95 against wm(1) = 90:00) all survive and
+    // pad under wmF = 290:00
+    val got = run(
+      left = Seq(
+        Seq((tsm(100), 98L, 10L)),
+        Seq((tsm(55), 1L, 11L), (tsm(60), 1L, 12L), (tsm(85), 1L, 13L),
+          (tsm(95), 1L, 14L), (tsm(300), 98L, 15L))),
+      right = Seq(
+        Seq((tsm(100), 99L, 20L)),
+        Seq((tsm(300), 99L, 21L))),
+      joinType = "leftOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "30 minutes")
+    assert(got == Set((10L, -1L), (11L, -1L), (12L, -1L), (13L, -1L), (14L, -1L)))
+  }
+
+  test("late filter at a fractional-ms watermark is microsecond-inclusive") {
+    // batch 3 filters against wm(2) = 190:00.750 (the left side governs)
+    val got = run(
+      left = Seq(
+        Seq((tsm(100), 98L, 10L)),
+        Seq((tsm(200, 750000L), 98L, 11L)),
+        Seq((tsm(300), 98L, 12L)),
+        Seq((tsm(190, 749999L), 1L, 13L),   // below -> DROPPED
+          (tsm(190, 750000L), 1L, 14L),     // equal -> DROPPED
+          (tsm(190, 750001L), 1L, 15L),     // +1us  -> KEPT, pads
+          (tsm(700), 98L, 16L))),
+      right = Seq(
+        Seq((tsm(100), 99L, 20L)),
+        Seq((tsm(210), 99L, 21L)),
+        Seq((tsm(300), 99L, 22L)),
+        Seq((tsm(700), 99L, 23L))),
+      joinType = "leftOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "30 minutes")
+    assert(got == Set((10L, -1L), (11L, -1L), (12L, -1L), (15L, -1L)))
+    // one batch earlier the same rows face wm(1) = 90:00 and all survive
+    val early = run(
+      left = Seq(
+        Seq((tsm(100), 98L, 10L)),
+        Seq((tsm(200, 750000L), 98L, 11L)),
+        Seq((tsm(190, 749999L), 1L, 12L), (tsm(190, 750000L), 1L, 13L),
+          (tsm(190, 750001L), 1L, 14L), (tsm(400), 98L, 15L))),
+      right = Seq(
+        Seq((tsm(100), 99L, 20L)),
+        Seq((tsm(210), 99L, 21L)),
+        Seq((tsm(400), 99L, 22L))),
+      joinType = "leftOuter", delay = "10 minutes",
+      lower = "0 seconds", upper = "30 minutes")
+    assert(early == Set((10L, -1L), (11L, -1L), (12L, -1L), (13L, -1L), (14L, -1L)))
+  }
+
+  test("inner join: dropped late rows never match buffered state") {
+    // delay 60m: batch 2 filters against wm(1) = 40:00, so both late left
+    // rows at 25 drop — even the one whose counterpart (k=4 @ 45) is
+    // still buffered — and nothing is emitted
+    val got = run(
+      left = Seq(
+        Seq((tsm(100), 98L, 10L)),
+        Seq((tsm(200), 98L, 11L)),
+        Seq((tsm(25), 3L, 12L), (tsm(25), 4L, 13L), (tsm(320), 98L, 14L))),
+      right = Seq(
+        Seq((tsm(30), 3L, 20L), (tsm(45), 4L, 21L), (tsm(100), 99L, 22L)),
+        Seq((tsm(200), 99L, 23L)),
+        Seq((tsm(320), 99L, 24L))),
+      joinType = "inner", delay = "60 minutes",
+      lower = "0 seconds", upper = "120 minutes")
+    assert(got.isEmpty)
   }
 }

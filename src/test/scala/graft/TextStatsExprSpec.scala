@@ -17,7 +17,7 @@ class TextStatsExprSpec extends SparkSpec {
       st.getField("n_punct").as("np"),
       length(regexp_replace(col("s"), "[^.,;:!?]", "")).as("np0"),
       st.getField("n_tokens").as("nt"),
-      TextAnalysis.tokenCountRegex(col("s")).as("nt0")).collect()
+      Reference.tokenCountRegex(col("s")).as("nt0")).collect()
     rows.foreach { r =>
       def cmp(a: Int, b: Int, what: String): Unit =
         assert(r.isNullAt(a) == r.isNullAt(b) &&
@@ -55,7 +55,7 @@ class TextStatsExprSpec extends SparkSpec {
     val docs = util.t(spark, "/root/testdata/sf0.001", "documents")
     val rows = docs.select(
       TextAnalysis.qualityScore(col("text")).as("q"),
-      TextAnalysis.qualityScoreRegex(col("text")).as("q0")).collect()
+      Reference.qualityScoreRegex(col("text")).as("q0")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 }

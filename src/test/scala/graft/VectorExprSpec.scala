@@ -42,7 +42,7 @@ class VectorExprSpec extends SparkSpec {
     // the native kernel gives IEEE NaN (checked in the next test)
     val rows = vecs.filter(!col("id").isin(2, 3)).select(col("id"),
       gf.cosineSimilarity(col("a"), col("b")).as("native"),
-      gf.cosineSimilarityHof(col("a"), col("b")).as("hof")).collect()
+      Reference.cosineSimilarityHof(col("a"), col("b")).as("hof")).collect()
     assert(rows.length == 4)
     rows.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null-ness mismatch id=${r.getInt(0)}")
