@@ -2,13 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Session-extension entry point: activate with
+/** Session-extension entry point. Every session [[GraftSession]] builds
+  * loads it; elsewhere activate it with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or the builder
-  * equivalent) to get graft's native functions in SQL on every session of
-  * the application — the deployment mode a shared 1000-executor cluster
-  * uses, where per-notebook `register()` calls don't scale. */
+  * equivalent), the deployment mode a shared 1000-executor cluster uses,
+  * where per-notebook `register()` calls don't scale. It installs:
+  *  - graft's native functions, callable from SQL;
+  *  - [[graft.plans.SampleMaterializedSortInput]], the query-stage
+  *    preparation rule that lets a global sort sample a materialized stage
+  *    instead of re-running a costly kernel. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     (graft.functions.GraftFunctions.all ++ graft.functions.PolarsSqlShims.all)
       .foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SampleMaterializedSortInput)
+  }
 }

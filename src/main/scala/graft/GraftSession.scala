@@ -14,17 +14,24 @@ import org.apache.spark.sql.SparkSession
   *   inference and scan time, so they are set here and never inside a
   *   query lambda.
   * - AQE on, UI off.
+  * - [[GraftExtensions]]: graft's functions in SQL and its planner rule,
+  *   so every main runs the plans the test suite checks.
   *
   * A caller passes only the confs that are its own as `extra` pairs (the
   * Verify dump's timestamp type, a bench's shuffle codec, a soak's state
-  * provider, `spark.sql.extensions`); they are applied after the shared
-  * ones.
+  * provider); they are applied after the shared ones.
   */
 object GraftSession {
 
   /** `SPARK_GRAFT_CPUS`, or the caller's own default when it is unset. */
-  def cpus(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
+  def cpus(default: Int): Int = cpus(sys.env.get("SPARK_GRAFT_CPUS"), default)
+
+  /** [[cpus]] over a given value of `SPARK_GRAFT_CPUS`: a positive integer,
+    * else an error that names the variable. */
+  def cpus(env: Option[String], default: Int): Int = env.fold(default) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   /** The conf pairs [[build]] applies, in order (`spark.master` first). */
   def conf(cpus: Int, extra: (String, String)*): Seq[(String, String)] =
@@ -35,6 +42,7 @@ object GraftSession {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.timeType.enabled" -> "true",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.ui.enabled" -> "false") ++ extra
 
   /** Build (or join) the JVM's session under [[conf]], logging at WARN. */

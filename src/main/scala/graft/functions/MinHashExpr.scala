@@ -34,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * keeps the DuckDB oracle (same md5 formulation in SQL) byte-identical.
   */
 case class MinHashMd5(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with Costly {
 
   require(k > 0, s"k must be positive, got $k")
 

@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null text → `[null]` (the HOF otherwise-branch wraps the null join), so
   * the result array itself is never null.
   */
-case class ShinglesExpr(child: Expression, w: Int) extends UnaryExpression {
+case class ShinglesExpr(child: Expression, w: Int) extends UnaryExpression with Costly {
 
   require(w > 0, s"shingle width must be positive, got $w")
 

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop. Null/empty text yields 0L like the HOF version (null vote sums
   * fall to the otherwise-0 branch).
   */
-case class SimHashExpr(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHashExpr(child: Expression, bits: Int) extends UnaryExpression with Costly {
 
   require(bits > 0 && bits <= 32, s"bits must be in [1, 32], got $bits")
 

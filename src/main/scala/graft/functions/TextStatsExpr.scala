@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (multi-byte UTF-8 sequences can never match the ASCII classes, so byte
   * classification is exact).
   */
-case class TextStatsExpr(child: Expression) extends UnaryExpression {
+case class TextStatsExpr(child: Expression) extends UnaryExpression with Costly {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess

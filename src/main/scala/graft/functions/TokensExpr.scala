@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null text → null (split(null) is null and filter propagates it), hence
   * `nullable` follows the child. Non-null text never yields null elements.
   */
-case class TokensExpr(child: Expression) extends UnaryExpression {
+case class TokensExpr(child: Expression) extends UnaryExpression with Costly {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess

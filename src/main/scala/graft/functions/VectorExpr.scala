@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * DIVIDE_BY_ZERO. IEEE matches DuckDB (and every vector-search engine);
   * a degenerate embedding must not kill a 100 TB job.
   */
-abstract class VectorBinaryExpr extends BinaryExpression {
+abstract class VectorBinaryExpr extends BinaryExpression with Costly {
 
   override def dataType: DataType = DoubleType
 

@@ -19,8 +19,7 @@ object FuzzSoak {
     val from = if (args.length > 0) args(0).toLong else 241L
     val to = if (args.length > 1) args(1).toLong else 1000L
     val cpus = if (args.length > 2) args(2).toInt else GraftSession.cpus(8)
-    val spark = GraftSession.build(cpus,
-      "spark.sql.extensions" -> "graft.GraftExtensions")
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     var failures = 0L

@@ -34,8 +34,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit = {
     val outCsv = if (args.length > 0) args(0) else "/tmp/plan_sweep.csv"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = GraftSession.build(GraftSession.cpus(8),
-      "spark.sql.extensions" -> "graft.GraftExtensions")
+    val spark = GraftSession.build(GraftSession.cpus(8))
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder(

@@ -34,8 +34,7 @@ object StreamFuzzSoak {
       if (provider == "rocksdb") Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       else Nil
-    val spark = GraftSession.build(GraftSession.cpus(4),
-      Seq("spark.sql.extensions" -> "graft.GraftExtensions") ++ rocksdb: _*)
+    val spark = GraftSession.build(GraftSession.cpus(4), rocksdb: _*)
     spark.sparkContext.setLogLevel("ERROR")
 
     var failures = 0L

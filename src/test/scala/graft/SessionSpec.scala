@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards for the one session factory ([[GraftSession]]): no other file
   * under `src/` builds a session, and the mains whose records are compared
   * across rounds (`Bench`, `Verify`) run under exactly the confs they ran
-  * under before the factory existed. */
+  * under before the factory existed, plus [[GraftExtensions]]. */
 class SessionSpec extends AnyFunSuite {
 
   /** The repository root: the nearest directory at or above the working
@@ -51,7 +51,11 @@ class SessionSpec extends AnyFunSuite {
     assert(effective(now, keys) == effective(before, keys))
   }
 
-  // the builder calls of Bench and Verify as they stood before the factory
+  // the builder calls of Bench and Verify as they stood before the factory,
+  // plus the one pair the factory has added since: graft's extensions (its
+  // SQL functions and its planner rule) in every main
+  private val extensions = "spark.sql.extensions" -> "graft.GraftExtensions"
+
   private def benchBefore(cpus: Int) = Seq(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
@@ -59,7 +63,8 @@ class SessionSpec extends AnyFunSuite {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.timeType.enabled" -> "true",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    extensions)
 
   private def verifyBefore(cpus: Int) = Seq(
     "spark.master" -> s"local[$cpus]",
@@ -68,13 +73,24 @@ class SessionSpec extends AnyFunSuite {
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
     "spark.sql.timeType.enabled" -> "true",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    extensions)
 
   test("Bench and Verify sessions keep their effective confs") {
     for (cpus <- Seq(4, 32)) {
       assertSameEffective(GraftSession.conf(cpus), benchBefore(cpus))
       assertSameEffective(GraftSession.conf(cpus, Verify.extraConf: _*),
         verifyBefore(cpus))
+    }
+  }
+
+  test("SPARK_GRAFT_CPUS must be a positive integer") {
+    assert(GraftSession.cpus(None, 8) == 8)
+    assert(GraftSession.cpus(Some(" 3 "), 8) == 3)
+    for (bad <- Seq("0", "-2", "four", "2.5", "")) {
+      val e = intercept[IllegalArgumentException](GraftSession.cpus(Some(bad), 8))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
     }
   }
 }

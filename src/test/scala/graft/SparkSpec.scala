@@ -6,10 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // the whole suite runs with graft's extensions active, proving the
+    // the factory loads graft's extensions, so the whole suite proves the
     // spark.sql.extensions entry point end-to-end
     val s = GraftSession.build(4,
-      "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.sql.warehouse.dir" -> "/tmp/graft_test/warehouse")
     s.sparkContext.setLogLevel("ERROR")
     s
