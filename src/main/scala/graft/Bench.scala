@@ -51,6 +51,8 @@ object Bench {
 
   private def scanMs(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
+    // a bare spark.read.parquet, inference job included, not util.t's
+    // footer read: scan_ms is compared across rounds
     spark.read.parquet(s"$sfDir/customer.parquet")
       .write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e6

@@ -1236,8 +1236,11 @@ object LazyFrame {
     else (left, right)
   }
 
+  /** Scan parquet. A single file's schema is read from its footer on the
+    * driver (no Spark job); a directory, a hive-partitioned path or a glob
+    * still launches Spark's schema-inference job. */
   def scanParquet(spark: SparkSession, path: String): LazyFrame =
-    LazyFrame(spark.read.parquet(path))
+    LazyFrame(graft.sources.ParquetRead(spark, path))
 
   /** Arrow IPC scan via the graft-ipc DSv2 connector (per-record-batch
     * splits, columnar, pruning). */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
+import graft.sources.ParquetRead
 import graft.streaming.Streams
 import util._
 
@@ -43,14 +44,14 @@ object QueriesStream {
     * in StreamingSpec. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val raw = s.read.parquet(path) // schema probe only — streams can't infer
+    val schema = ParquetRead.schema(s, path) // streams can't infer
     // glob form: FileStreamSource force-overrides `basePath` with the path
     // itself for non-glob paths, and a single FILE basePath is rejected —
     // the glob keeps our directory basePath in force (and matches both the
     // driver's single file and ScaleData's part-file directory)
-    val stream = Streams.readParquetStream(s, s"$path*", raw.schema,
+    val stream = Streams.readParquetStream(s, s"$path*", schema,
       maxFilesPerTrigger = Int.MaxValue, basePath = Some(dir))
-    util.normalizeEventsTs(stream, raw.schema("ts").dataType)
+    util.normalizeEventsTs(stream, schema("ts").dataType)
   }
 
   private def replay(df: DataFrame, key: String, mode: String): DataFrame =
@@ -256,8 +257,8 @@ object QueriesStream {
     // batch filter's row set.
     "stream_curation_filter" -> ((s, d) => {
       val path = s"$d/documents.parquet"
-      val raw = s.read.parquet(path)
-      val stream = Streams.readParquetStream(s, s"$path*", raw.schema,
+      val stream = Streams.readParquetStream(s, s"$path*",
+        ParquetRead.schema(s, path),
         maxFilesPerTrigger = Int.MaxValue, basePath = Some(d))
       val curated = stream
         .withColumn("quality", graft.text.TextAnalysis.qualityScore(col("text")))

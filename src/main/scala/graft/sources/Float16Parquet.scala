@@ -3,14 +3,13 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Float16 dtype support (reference `crates/polars-core/src/datatypes/
@@ -203,12 +202,14 @@ object Float16Parquet {
     * keep their file order and names — a FLOAT16 file scans like any other
     * parquet source, matching the reference's widen-on-ingest contract. */
   def scan(spark: SparkSession, path: String): DataFrame = {
-    val files = new java.io.File(path).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).sortBy(_.getName)
+    // list and read the footer through the session's Hadoop FileSystem:
+    // java.io.File cannot list a `file:` URI (or any other scheme)
+    val dir = new Path(path)
+    val files = dir.getFileSystem(Bridge.hadoopConf(spark)).listStatus(dir)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
     require(files.nonEmpty, s"no parquet files under $path")
-    val footer = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(files.head.getPath), new Configuration()))
-    val msg = try footer.getFooter.getFileMetaData.getSchema finally footer.close()
+    val msg = ParquetRead.footer(spark, files.head).getFileMetaData.getSchema
     import scala.jdk.CollectionConverters._
     val (carrier, f16Names) = {
       val fs = scala.collection.mutable.ArrayBuffer[StructField]()

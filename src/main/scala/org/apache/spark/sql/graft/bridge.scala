@@ -1,14 +1,18 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column ⇄ Expression converters and the
   * session FunctionRegistry so graft can wrap its native Catalyst
-  * expressions as user-facing Columns and SQL functions. Lives in an
-  * `org.apache.spark.sql` subpackage purely for access; contains no logic.
+  * expressions as user-facing Columns and SQL functions, plus the session
+  * state, schema and listener-bus calls that are `private[spark]`. Lives in
+  * an `org.apache.spark.sql` subpackage purely for access; contains no logic.
   * (Same approach as every SparkSessionExtensions-based library that ships
   * custom expressions.) */
 object Bridge {
@@ -30,6 +34,24 @@ object Bridge {
   def registerFunction(spark: SparkSession, id: FunctionIdentifier,
                        info: ExpressionInfo,
                        builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(id, info, builder)
+    state(spark).functionRegistry.registerFunction(id, info, builder)
+
+  private def state(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+
+  /** The session's SQL conf (what Spark's parquet schema converter reads). */
+  def sqlConf(spark: SparkSession): SQLConf = state(spark).conf
+
+  /** A Hadoop conf as the session's file sources build it: the context's
+    * `spark.hadoop.*` settings plus the session's SQL confs. */
+  def hadoopConf(spark: SparkSession): Configuration = state(spark).newHadoopConf()
+
+  /** `s` with every field, array element and map value nullable, as
+    * Spark's file sources expose a data schema. */
+  def asNullable(s: StructType): StructType = s.asNullable
+
+  /** Block until every listener has seen every event posted so far, so
+    * listener counters can be read without sleeping. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -74,6 +74,15 @@ class Float16Spec extends SparkSpec {
     assert(Float16Parquet.halfBitsToFloat(0x7BFF) == 65504.0f)
   }
 
+  test("scan takes a file: URI and reads the same rows as the plain path") {
+    val dir = "/tmp/graft_f16_spec_uri"
+    writeRawHalves(dir, boundaryBits)
+    val uri = new java.io.File(dir).toURI.toString
+    assert(uri.startsWith("file:"))
+    def rows(p: String) = Float16Parquet.scan(spark, p).orderBy("id").collect().toSeq
+    assert(rows(uri) == rows(dir))
+  }
+
   test("encode/decode round-trips ALL finite halves; round-to-nearest-even at halfway points") {
     // exhaustive: every finite half bit pattern survives decode→encode
     var bits = 0

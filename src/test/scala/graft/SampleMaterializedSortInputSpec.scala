@@ -167,20 +167,13 @@ class SampleMaterializedSortInputSpec extends SparkSpec with AdaptiveSparkPlanHe
     }.toSet
 
   test("the olap workload's keys run without an inserted exchange") {
-    val olap = Seq("agg_tpch_q1", "agg_sum_two_keys", "agg_count_distinct",
-      "agg_dynamic_1h", "join_inner", "join_left_agg", "join_star",
-      "join_asof_backward", "win_rank", "win_rolling_time", "topk_global")
-    assert(firedKeys(olap).isEmpty)
+    assert(firedKeys(BenchWorkloads.olap).isEmpty)
   }
 
   test("the curation workload's keys fire exactly where a kernel feeds the sort") {
-    val curation = Seq("explode_words", "text_quality", "text_langid",
-      "text_fingerprint", "text_fuzzy_pairs", "text_token_stats",
-      "dedup_near_pairs", "dedup_minhash_sig", "dedup_simhash",
-      "sim_bruteforce_topk", "sim_lsh_pairs")
     // dedup_near_pairs hashes below its join's exchanges; sim_bruteforce_topk
     // scores below a window's; explode_words sorts under a limit
-    assert(firedKeys(curation) == Set(
+    assert(firedKeys(BenchWorkloads.curation) == Set(
       "text_quality", "text_langid", "text_fingerprint", "text_fuzzy_pairs",
       "text_token_stats", "dedup_minhash_sig", "dedup_simhash", "sim_lsh_pairs"))
   }

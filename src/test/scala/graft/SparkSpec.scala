@@ -34,6 +34,23 @@ abstract class SparkSpec extends AnyFunSuite {
   def soakTest(name: String)(body: => Any): Unit =
     if (Soak.on) test(name)(body) else ignore(name)(body)
 
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran. The listener bus is drained before and after, never slept on. */
+  def jobsStarted[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Run `body` with the given SQL confs set, restoring prior values after. */
   def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
     val conf = spark.conf
