@@ -155,13 +155,13 @@ object Bench {
             name -> Left("err")
         }
       }
-      // r21 (r20 verdict #3): release the dedup verify caches AFTER the
-      // pass, outside any timed region, so (a) every pass's dedup keys
-      // compute from the parquet inputs rather than an earlier pass's
-      // persisted shingles — passes are independent samples — and (b) the
-      // persist registry never crosses its cap mid-run (BENCH_r20's tail
-      // carried eviction WARNs and pass ≥4 silently lost cache reuse,
-      // skewing medians vs mins).
+      // r21 (r20 verdict #3): release the dedup verify caches (`rescan`'s
+      // persisted candidate pairs) AFTER the pass, outside any timed
+      // region, so (a) every pass's dedup keys compute from the parquet
+      // inputs rather than an earlier pass's persisted pairs — passes are
+      // independent samples — and (b) the persist registry never crosses
+      // its cap mid-run (BENCH_r20's tail carried eviction WARNs and pass
+      // ≥4 silently lost cache reuse, skewing medians vs mins).
       graft.text.Dedup.releaseCache()
       times
     }

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   *  - n-gram Jaccard: exact verification on LSH candidates only.
   *
   * Hash primitive is md5 (hex string): identical across engines, which keeps
-  * every step DuckDB-oracle-checkable. xxhash64 would be faster; swap via
-  * `hashFn` once correctness is locked.
+  * every step DuckDB-oracle-checkable. xxhash64 would be faster.
   */
 object Dedup {
 
@@ -49,10 +48,12 @@ object Dedup {
   }
 
   /** LSH banding: signature (length k) → b bands of r rows, hashed. */
-  def bands(signature: Column, b: Int, r: Int): Column =
+  def bands(signature: Column, b: Int, r: Int): Column = {
+    require(b > 0 && r > 0, s"LSH bands need b > 0 and r > 0; got b = $b, r = $r")
     transform(sequence(lit(0), lit(b - 1)),
       i => struct(i.as("band_id"),
         md5(array_join(slice(signature, i * r + 1, lit(r)), "|")).as("band_hash")))
+  }
 
   /** (id, distinct shingles) projection — the shared first stage of the
     * MinHash pipeline. Its own projection so downstream stages read the
@@ -75,6 +76,8 @@ object Dedup {
   }
 
   private def bandedIds(sh: DataFrame, k: Int, b: Int): DataFrame = {
+    require(k > 0 && b > 0 && k % b == 0,
+      s"LSH banding needs k > 0 and b > 0 dividing k; got k = $k, b = $b")
     val r = k / b
     sh.select(col("__id"), signatureFromShingles(col("__sh"), k).as("__sig"))
       .select(col("__id"), explode(bands(col("__sig"), b, r)).as("__band"))
@@ -154,51 +157,27 @@ object Dedup {
     when(uni > 0, inter / uni).otherwise(lit(0.0))
   }
 
-  /** Live verify-stage persists, oldest first: the candidate pairs in
-    * `rescan` mode, the shingle projection in `cached` mode (see
-    * [[nearDuplicates]]). The registry holds at most
-    * `spark.graft.dedup.maxLivePersists` frames (default
-    * [[DefaultMaxLivePersists]]) — when a new call would exceed it, the
-    * OLDEST is unpersisted WITH A WARNING (an evicted frame still mid-query
-    * recomputes correctly but silently loses its cache; raise the conf if
-    * you genuinely run more concurrent pipelines) — so cached storage
-    * stays bounded under repeated calls while up to that many CONCURRENT
-    * or interleaved pipelines (e.g. a `nearDuplicates` and a
-    * `fuzzyNearDuplicates` whose results are both consumed later) each
-    * keep their cache live instead of silently unpersisting each other's
-    * mid-query (r18 verdict: the previous single slot did exactly that).
-    *
-    * STORAGE BOUND (ADVICE r19): in `cached` verify mode each live frame
-    * is a corpus-sized shingle projection (~[[ShingleInflation]]× the
-    * compressed input — ~28 GB at sf100), so callers that never call
-    * [[releaseCache]] can hold up to maxLivePersists × that. `rescan`
-    * mode persists only candidate PAIRS (metadata-scale). Call
-    * [[releaseCache]] after consuming results to drop all. */
-  private val DefaultMaxLivePersists = 4
-  // The registry is process-global while the cap is read from the
-  // REGISTERING frame's session, so in a multi-session JVM the effective
-  // cap is last-writer-wins across sessions (ADVICE r20 — documented
-  // tradeoff; concurrent pipelines in one JVM share one storage pool, so a
-  // per-session registry would not bound the actual resource any better).
+  /** Live `rescan` candidate-pair persists, oldest first (see
+    * [[nearDuplicates]]). At most [[MaxLivePersists]] stay live: when a new
+    * call would exceed it, the OLDEST is unpersisted WITH A WARNING (an
+    * evicted frame still mid-query recomputes correctly but loses its
+    * cache). Storage stays bounded under repeated calls, while up to that
+    * many CONCURRENT or interleaved pipelines (e.g. a `nearDuplicates` and
+    * a `fuzzyNearDuplicates` whose results are both consumed later) each
+    * keep their pairs cached instead of unpersisting each other's
+    * mid-query, as a single slot did. Call [[releaseCache]] after
+    * consuming results to drop all. */
+  private val MaxLivePersists = 4
   private val livePersists = new java.util.ArrayDeque[DataFrame]()
 
   private def registerPersist(df: DataFrame): Unit =
     livePersists.synchronized {
-      val cap = df.sparkSession.conf
-        .getOption("spark.graft.dedup.maxLivePersists")
-        .flatMap { v =>
-          val parsed = scala.util.Try(v.trim.toInt).toOption
-          if (parsed.isEmpty)
-            log.warn(s"spark.graft.dedup.maxLivePersists='$v' is not an " +
-              s"integer; falling back to the default $DefaultMaxLivePersists")
-          parsed
-        }.getOrElse(DefaultMaxLivePersists)
       livePersists.addLast(df)
-      while (livePersists.size > math.max(1, cap)) {
-        log.warn(s"dedup persist registry over its cap ($cap): evicting the " +
-          "oldest unreleased verify cache — a pipeline still consuming it " +
-          "will recompute instead of reading cache. Call Dedup.releaseCache()" +
-          " after consuming results, or raise spark.graft.dedup.maxLivePersists.")
+      while (livePersists.size > MaxLivePersists) {
+        log.warn(s"dedup persist registry over its cap ($MaxLivePersists): " +
+          "evicting the oldest unreleased candidate-pair cache — a pipeline " +
+          "still consuming it will recompute instead of reading cache. Call " +
+          "Dedup.releaseCache() after consuming results.")
         livePersists.pollFirst().unpersist(blocking = false)
       }
     }
@@ -221,19 +200,18 @@ object Dedup {
     * may still convert at runtime. */
   private val BroadcastIdCap = 4L * 1000 * 1000
 
-  /** Measured in-memory blow-up of the cached (id, shingles) projection
-    * over the input's compressed parquet bytes: 28 GB cache from 0.57 GB
-    * of documents at sf100 (SCALE.md) ≈ 49×. Rounded down to keep the
-    * auto-switch conservative about choosing `cached`. */
+  /** Measured in-memory blow-up of the corpus (id, shingles) projection
+    * over the input's compressed parquet bytes: 28 GB from 0.57 GB of
+    * documents at sf100 (SCALE.md) ≈ 49×, rounded down. */
   private val ShingleInflation = 48L
 
   /** How many multiples of the storage budget the estimated corpus-shingle
-    * footprint may reach before `auto` abandons `recompute` for `rescan`.
-    * `recompute` persists nothing, so the budget is a proxy for the real
-    * limit — the verify joins carry the FULL corpus-shingle projection,
-    * and once it dwarfs execution memory those joins spill while
-    * `rescan`'s candidate-semi-filtered verify touches only ~12% of docs.
-    * Bracketing measurements (SCALE.md, "Round-22 additions",
+    * footprint may reach before the verify abandons `recompute` for
+    * `rescan`. `recompute` persists nothing, so the budget is a proxy for
+    * the real limit — the verify joins carry the FULL corpus-shingle
+    * projection, and once it dwarfs execution memory those joins spill
+    * while `rescan`'s candidate-semi-filtered verify touches only ~12% of
+    * docs. Bracketing measurements (SCALE.md, "Round-22 additions",
     * verify-strategy scale map; 2 GB budget): at 1.3× budget (sf10)
     * recompute beat rescan 4.91 vs 6.29 s; at 13× (sf100) it lost 35.2 vs
     * 28.1 s. The switch sits at the geometric midpoint 4×. The probe that
@@ -253,8 +231,8 @@ object Dedup {
   /** Cache budget from executor confs when they are set: executor memory ×
     * `spark.memory.fraction` (default 0.6) is the unified region a worker
     * actually has for storage, quartered like the local-heap fallback. On
-    * clusters this is what the `auto` verify switch should see — the
-    * driver JVM's own heap says nothing about executor storage. */
+    * clusters this is what the verify switch should see — the driver JVM's
+    * own heap says nothing about executor storage. */
   private[graft] def budgetFromConfs(execMem: Option[String],
                                      fraction: Option[Double]): Option[Long] =
     execMem.map { m =>
@@ -263,8 +241,8 @@ object Dedup {
       (bytes * fraction.getOrElse(0.6) / 4).toLong
     }
 
-  /** The `auto` verify budget: executor-conf-derived on a CLUSTER master,
-    * local JVM heap on a local one — local mode IGNORES
+  /** The verify switch's storage budget: executor-conf-derived on a
+    * CLUSTER master, local JVM heap on a local one — local mode IGNORES
     * `spark.executor.memory` at runtime (the driver heap is the only
     * storage), so a local session carrying cluster-default confs must not
     * derive its budget from them (ADVICE r19). */
@@ -274,127 +252,90 @@ object Dedup {
      else budgetFromConfs(execMem, fraction))
       .getOrElse(Runtime.getRuntime.maxMemory() / 4)
 
-  /** Resolve the verify strategy (see [[nearDuplicates]] for semantics):
-    * `auto` picks `rescan` when the estimated corpus-shingle footprint
-    * (optimizer-stats input bytes × [[ShingleInflation]]) exceeds
-    * [[RecomputeBudgetFactor]] × the storage budget — derived from
-    * `spark.executor.memory` × `spark.memory.fraction` when those confs
-    * are set, else from the local JVM heap — or when the input has no
-    * usable stats at all (the sentinel default would otherwise silently
-    * force `rescan` as if it were a measurement; it still resolves to
-    * `rescan` — the bounded-state shape is the safe call for an
-    * unknown-size input — but the choice is logged). Below the line,
-    * `auto` resolves to `recompute` since r22: recompute measured faster than the `cached` persist it replaced at every SF
-    * where either fits (sf0.1: 0.795 vs 0.821 s; sf10: 4.91 vs 6.40 s,
-    * 1.30×; SCALE.md "Round-22 additions", probe at commit 38e36ee) — the
-    * corpus-shingle persist costs more to build and hold
-    * than the shingle kernels cost to re-run now that they are
-    * allocation-free byte loops (r21). The recompute↔rescan crossover is
-    * measured on [[RecomputeBudgetFactor]]. */
-  private[graft] def pickVerify(df: DataFrame, verify: String,
-                                what: String): String =
-    verify match {
-      case "auto" =>
-        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val conf = df.sparkSession.conf
-        val budget = autoBudget(df.sparkSession.sparkContext.master,
-          conf.getOption("spark.executor.memory"),
-          conf.getOption("spark.memory.fraction").map(_.toDouble))
-        if (est >= StatsSentinel) {
-          log.info(s"$what: input stats unavailable (sizeInBytes=$est); " +
-            "auto-picking the bounded-state 'rescan' verify — pass " +
-            "verify=\"recompute\" explicitly if the input is known-small")
-          "rescan"
-        } else if (est * ShingleInflation >
-                     BigInt(RecomputeBudgetFactor) * budget) "rescan"
-        else "recompute"
-      case m @ ("rescan" | "cached" | "recompute") => m
-      case other => throw new IllegalArgumentException(
-        s"verify must be auto|rescan|cached|recompute, got '$other'")
+  /** Whether the near-dup verify takes the `rescan` shape (see
+    * [[nearDuplicates]]) rather than `recompute`: true when the estimated
+    * corpus-shingle footprint (optimizer-stats input bytes ×
+    * [[ShingleInflation]]) exceeds [[RecomputeBudgetFactor]] × the storage
+    * budget ([[autoBudget]]), or when the input has no usable stats at all
+    * (the sentinel default would otherwise pass for a measurement; the
+    * bounded-state shape is the safe call for an unknown-size input, and
+    * the choice is logged). */
+  private[graft] def rescan(df: DataFrame, what: String): Boolean = {
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= StatsSentinel) {
+      log.info(s"$what: input stats unavailable (sizeInBytes=$est); " +
+        "verifying through the bounded-state 'rescan' shape")
+      true
+    } else {
+      val conf = df.sparkSession.conf
+      val budget = autoBudget(df.sparkSession.sparkContext.master,
+        conf.getOption("spark.executor.memory"),
+        conf.getOption("spark.memory.fraction").map(_.toDouble))
+      est * ShingleInflation > BigInt(RecomputeBudgetFactor) * budget
     }
-
-  /** Verify front end for the `rescan` strategy: run LSH candidate
-    * generation, persist the (small) pair set eagerly — the one `count`
-    * both materializes it and drives the broadcast decision — and return
-    * it together with the distinct candidate-id set named `idCol`
-    * (broadcast-hinted at or below [[BroadcastIdCap]]) for semi-filtering
-    * the verify side. */
-  private def persistedCandidates(df: DataFrame, idCol: String,
-                                  textCol: String, w: Int, k: Int, b: Int,
-                                  maxBucket: Int, parallelism: Int)
-      : (DataFrame, DataFrame) = {
-    val cands = pairsFromBuckets(
-      bandedIds(shingled(df, idCol, textCol, w, parallelism), k, b), maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerPersist(cands)
-    val nPairs = cands.count()
-    val ids = cands.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .distinct()
-    (cands, if (2 * nPairs <= BroadcastIdCap) broadcast(ids) else ids)
   }
 
-  /** Shared Jaccard verify tail: join the candidate pairs back to a
-    * (__id, __sh) shingle frame on both sides and keep pairs at or above
-    * the threshold. */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame,
-                            threshold: Double): DataFrame =
-    cands
-      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
-      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
-      .withColumn("jaccard", round(jaccardFromShingles(col("__sha"), col("__shb")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+  /** Verify front end shared by [[nearDuplicates]] and
+    * [[fuzzyNearDuplicates]]: the LSH candidate pairs and the frame the
+    * verify reads. Under `rescan` the (small) pair set is persisted
+    * eagerly — the one `count` both materializes it and drives the
+    * broadcast decision — and the verify reads the input semi-joined to
+    * the distinct candidate ids (broadcast-hinted at or below
+    * [[BroadcastIdCap]]). Under `recompute` nothing is persisted and the
+    * verify reads the input itself. */
+  private def candidates(df: DataFrame, idCol: String, textCol: String,
+                         w: Int, k: Int, b: Int, maxBucket: Int,
+                         parallelism: Int, what: String)
+      : (DataFrame, DataFrame) = {
+    val pairs = minhashCandidates(df, idCol, textCol, w, k, b, maxBucket,
+      parallelism)
+    if (!rescan(df, what)) (pairs, df)
+    else {
+      val cands =
+        pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      registerPersist(cands)
+      val nPairs = cands.count()
+      val ids = cands.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+        .distinct()
+      (cands, df.join(if (2 * nPairs <= BroadcastIdCap) broadcast(ids) else ids,
+        Seq(idCol), "left_semi"))
+    }
+  }
 
   /** MinHash-LSH near-dup pairs verified by exact Jaccard ≥ threshold.
-    * Result is identical under either verify strategy; the strategies
-    * trade fixed latency against bounded state:
+    * The engine picks the verify shape from the input's optimizer
+    * statistics ([[rescan]]); the result is the same under either, and the
+    * shapes trade fixed latency against bounded state:
     *
-    *  - `verify = "rescan"` (r18, the corpus-scale shape): candidate
-    *    generation streams the shingle/MinHash/band pipeline through ONE
-    *    exchange and the resulting (id_a, id_b) pairs — bounded by LSH
-    *    bucket collisions, orders of magnitude smaller than the corpus —
-    *    are what gets persisted (eagerly: one `count` materializes them
-    *    and drives the broadcast decision). Verification re-derives
-    *    shingles ONLY for documents appearing in some pair: a semi-join of
-    *    the raw input on the candidate-id set (broadcast-hinted below
-    *    [[BroadcastIdCap]] ids, shuffle otherwise) + a second shingle pass
-    *    over that slice (~12% of docs at sf100). Replaces the corpus-wide
-    *    shingle cache (28 GB + 10 GB spill at sf100) and its two
-    *    full-corpus verify shuffles: 67.1 → 23.1 s steady-state at sf100
-    *    (SCALE.md). State is bounded by the candidate set at ANY corpus
-    *    size. The input is scanned twice — pass a directly scannable
-    *    frame, or persist `df` first if it is an expensive derivation.
-    *  - `verify = "recompute"` (r22, the small-input shape): no persist
-    *    anywhere — candidate generation and both verify sides each derive
-    *    the shingle projection from the input directly, one action, zero
-    *    extra jobs, zero storage footprint. Since the shingle/minhash
-    *    kernels became allocation-free byte loops (r21), re-running them
-    *    is cheaper than building + holding the corpus-shingle cache:
-    *    recompute vs cached measured 0.795 vs 0.821 s at sf0.1 and 4.91 vs
-    *    6.40 s (1.30×) at sf10 (SCALE.md "Round-22 additions"; the probe
-    *    is `graft.testing.DedupVerifyProbe` at commit 38e36ee). The input
-    *    is scanned three times — pass a directly scannable frame, or
-    *    persist `df` yourself if it is an expensive derivation.
-    *  - `verify = "cached"` (r12): persist the corpus (id, shingles)
-    *    projection MEMORY_AND_DISK and join the verify sides back to it —
-    *    a single action with no extra job launches, but the cache is ~50×
-    *    the input parquet bytes ([[ShingleInflation]]), becomes the
-    *    bottleneck long before 100 TB, and measured SLOWER than
-    *    `recompute` even where it fits (the build + memory pressure cost
-    *    more than the re-derivation). Kept for callers whose input frame
-    *    is itself expensive to recompute.
-    *  - `verify = "auto"` (default): `rescan` when the estimated
-    *    corpus-shingle footprint (optimizer-stats input bytes ×
-    *    [[ShingleInflation]]) exceeds [[RecomputeBudgetFactor]] (4) × the
-    *    storage budget ([[pickVerify]]). The budget is itself already
-    *    quartered — `spark.executor.memory` × `spark.memory.fraction` / 4
-    *    when those are set (the conf-driven cluster path), else the local
-    *    JVM max heap / 4 — so the switch falls where the footprint passes
-    *    executor memory × fraction, or the whole local heap. Also `rescan`
-    *    when the input has no usable optimizer stats (logged; pass the
-    *    mode explicitly for known-small derived inputs); `recompute` below
-    *    the switch (r22 — previously `cached`; same results, measured
-    *    faster).
+    *  - `rescan` (r18, the corpus-scale shape): candidate generation
+    *    streams the shingle/MinHash/band pipeline through ONE exchange and
+    *    the resulting (id_a, id_b) pairs — bounded by LSH bucket
+    *    collisions, orders of magnitude smaller than the corpus — are what
+    *    gets persisted (eagerly: one `count` materializes them and drives
+    *    the broadcast decision). Verification re-derives shingles ONLY for
+    *    documents appearing in some pair: a semi-join of the raw input on
+    *    the candidate-id set (broadcast-hinted below [[BroadcastIdCap]]
+    *    ids, shuffle otherwise) + a second shingle pass over that slice
+    *    (~12% of docs at sf100). Replaces the corpus-wide shingle cache
+    *    (28 GB + 10 GB spill at sf100) and its two full-corpus verify
+    *    shuffles: 67.1 → 23.1 s steady-state at sf100 (SCALE.md). State is
+    *    bounded by the candidate set at ANY corpus size. The input is
+    *    scanned twice — pass a directly scannable frame, or persist `df`
+    *    first if it is an expensive derivation.
+    *  - `recompute` (r22, the small-input shape): no persist anywhere —
+    *    candidate generation and both verify sides each derive the shingle
+    *    projection from the input directly, one action, zero extra jobs,
+    *    zero storage footprint. Since the shingle/minhash kernels became
+    *    allocation-free byte loops (r21), re-running them is cheaper than
+    *    building and holding a corpus-shingle cache (measured at every SF,
+    *    SCALE.md "Round-22 additions"). The input is scanned three times —
+    *    pass a directly scannable frame, or persist `df` yourself if it is
+    *    an expensive derivation.
+    *
+    * The switch ([[rescan]]): `rescan` once the estimated corpus-shingle
+    * footprint passes executor memory × `spark.memory.fraction` (or the
+    * whole local heap), or when the input has no usable optimizer stats
+    * (e.g. an RDD-backed frame); `recompute` otherwise.
     *
     * `parallelism` > 0 fans an under-partitioned input out to that many
     * tasks before the CPU-bound shingle/hash stages (see [[shingled]]);
@@ -402,30 +343,17 @@ object Dedup {
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
                      w: Int = 3, k: Int = 16, b: Int = 4,
                      threshold: Double = 0.8, maxBucket: Int = 0,
-                     parallelism: Int = 0,
-                     verify: String = "auto"): DataFrame =
-    pickVerify(df, verify, "nearDuplicates") match {
-      case "rescan" =>
-        val (cands, idsHinted) =
-          persistedCandidates(df, idCol, textCol, w, k, b, maxBucket,
-            parallelism)
-        val shV = shingled(df.join(idsHinted, Seq(idCol), "left_semi"),
-          idCol, textCol, w, parallelism)
-        verifyJaccard(cands, shV, threshold)
-      case "recompute" =>
-        // no persist: the same deterministic shingle subtree is planted in
-        // candidate generation and in each verify side — three derivations
-        // from the input, zero cached state (see strategy docs above)
-        val sh = shingled(df, idCol, textCol, w, parallelism)
-        verifyJaccard(pairsFromBuckets(bandedIds(sh, k, b), maxBucket), sh,
-          threshold)
-      case _ =>
-        val sh = shingled(df, idCol, textCol, w, parallelism)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        registerPersist(sh)
-        verifyJaccard(pairsFromBuckets(bandedIds(sh, k, b), maxBucket), sh,
-          threshold)
-    }
+                     parallelism: Int = 0): DataFrame = {
+    val (cands, src) = candidates(df, idCol, textCol, w, k, b, maxBucket,
+      parallelism, "nearDuplicates")
+    val sh = shingled(src, idCol, textCol, w, parallelism)
+    cands
+      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
+      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
+      .withColumn("jaccard", round(jaccardFromShingles(col("__sha"), col("__shb")), 4))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
 
   /** Fuzzy near-duplicates: the SAME banded-MinHash candidate generation
     * as [[nearDuplicates]], but verified by EDIT-distance similarity
@@ -433,38 +361,26 @@ object Dedup {
     * Jaccard — the verify used when token reordering should NOT count as
     * similar (boilerplate detection, template spam). Scale shape: edit
     * distance is O(len²) per pair, so it only ever runs on LSH candidate
-    * pairs (never all-pairs) and on a `capChars` prefix that bounds the
-    * worst case; Spark's `levenshtein` is codegen'd. Pairs where both
+    * pairs (never all-pairs) and on a `capChars` prefix (> 0) that bounds
+    * the worst case; Spark's `levenshtein` is codegen'd. Pairs where both
     * prefixes are empty have no defined similarity and are dropped.
-    * `verify` behaves as on [[nearDuplicates]]: under `rescan` the prefix
-    * side is semi-filtered to candidate ids (persisted pairs + eager
-    * count + broadcast-hinted id set) so the full corpus's text prefixes
-    * never shuffle; under `cached` the prefixes join directly (no persist
-    * needed — prefixes are recomputed per side, a substring of a scan).
-    * NOTE the `auto` tradeoff differs here: `cached` and `recompute` are
-    * the SAME pipeline for the fuzzy verify (nothing is ever persisted on
-    * this path), so the shingle-inflation heap rationale does not
-    * apply — what `auto`'s `rescan` buys instead is shuffle volume (the
-    * capChars-bounded corpus prefixes, ~`capChars` bytes/doc, never
-    * shuffle; only the candidate slice does), paid for with the extra
-    * candidate-count job and a second input scan. At corpus scale that is
-    * still the right default; for small inputs pass `verify="cached"`. */
+    * The verify shape is picked as on [[nearDuplicates]]: under `rescan`
+    * the prefix side is semi-filtered to candidate ids (persisted pairs +
+    * eager count + broadcast-hinted id set) so the full corpus's text
+    * prefixes never shuffle; under `recompute` the prefixes join directly
+    * (a substring of a scan, recomputed per side). Here `rescan` buys
+    * shuffle volume rather than heap — only the candidate slice's
+    * prefixes (~`capChars` bytes/doc) shuffle — paid for with the extra
+    * candidate-count job and a second input scan. */
   def fuzzyNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                           w: Int = 3, k: Int = 16, b: Int = 4,
                           threshold: Double = 0.8, capChars: Int = 400,
-                          maxBucket: Int = 0, parallelism: Int = 0,
-                          verify: String = "auto"): DataFrame = {
-    val (cands, txtSrc) = pickVerify(df, verify, "fuzzyNearDuplicates") match {
-      case "rescan" =>
-        val (c, idsHinted) =
-          persistedCandidates(df, idCol, textCol, w, k, b, maxBucket,
-            parallelism)
-        (c, df.join(idsHinted, Seq(idCol), "left_semi"))
-      case _ =>
-        (minhashCandidates(df, idCol, textCol, w, k, b, maxBucket,
-          parallelism), df)
-    }
-    val txt = txtSrc.select(col(idCol),
+                          maxBucket: Int = 0,
+                          parallelism: Int = 0): DataFrame = {
+    require(capChars > 0, s"capChars must be positive; got $capChars")
+    val (cands, src) = candidates(df, idCol, textCol, w, k, b, maxBucket,
+      parallelism, "fuzzyNearDuplicates")
+    val txt = src.select(col(idCol),
       substring(col(textCol), 1, capChars).as("__t"))
     val denom = greatest(length(col("__ta")), length(col("__tb")))
     cands

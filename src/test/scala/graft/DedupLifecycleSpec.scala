@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 import graft.text.Dedup
 
-/** Verify-stage persist lifecycle + auto-switch budget (r18 verdict item 3
-  * and ADVICE): interleaved pipelines must keep their caches live instead
-  * of silently unpersisting each other; the `auto` budget must honor
-  * executor confs; inputs without optimizer stats must not be treated as
-  * petabyte measurements. */
+/** Verify-stage persist lifecycle + verify-switch budget (r18 verdict item
+  * 3 and ADVICE): interleaved pipelines must keep their caches live instead
+  * of silently unpersisting each other; the budget must honor executor
+  * confs; inputs without optimizer stats must not be treated as petabyte
+  * measurements. The engine picks the verify shape, so the persisting
+  * `rescan` shape is reached through frames without statistics. */
 class DedupLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,13 +21,17 @@ class DedupLifecycleSpec extends SparkSpec {
     (5L, s"completely unrelated text about spark $tag")
   ).toDF("doc_id", "text")
 
+  /** The same rows as `df`, RDD-backed: Catalyst cannot size the frame. */
+  private def noStats(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.rdd, df.schema)
+
   test("interleaved near-dup pipelines both keep their persists live") {
     Dedup.releaseCache()
     assert(Dedup.liveCacheCount == 0)
-    val r1 = Dedup.nearDuplicates(docs("one"), "doc_id", "text",
-      w = 2, k = 8, b = 4, threshold = 0.5, verify = "cached")
-    val r2 = Dedup.fuzzyNearDuplicates(docs("two"), "doc_id", "text",
-      w = 2, k = 8, b = 4, threshold = 0.5, verify = "rescan")
+    val r1 = Dedup.nearDuplicates(noStats(docs("one")), "doc_id", "text",
+      w = 2, k = 8, b = 4, threshold = 0.5)
+    val r2 = Dedup.fuzzyNearDuplicates(noStats(docs("two")), "doc_id", "text",
+      w = 2, k = 8, b = 4, threshold = 0.5)
     assert(Dedup.liveCacheCount == 2,
       s"expected both pipelines' persists live, got ${Dedup.liveCacheCount}")
     // consume BOTH results only now — with the old single slot the second
@@ -42,40 +48,54 @@ class DedupLifecycleSpec extends SparkSpec {
   test("persist registry stays bounded under repeated calls") {
     Dedup.releaseCache()
     (1 to 6).foreach { i =>
-      Dedup.nearDuplicates(docs(s"rep$i"), "doc_id", "text",
-        w = 2, k = 8, b = 4, threshold = 0.5, verify = "cached").count()
+      Dedup.nearDuplicates(noStats(docs(s"rep$i")), "doc_id", "text",
+        w = 2, k = 8, b = 4, threshold = 0.5).count()
     }
     assert(Dedup.liveCacheCount == 4,
       s"registry must cap at 4, got ${Dedup.liveCacheCount}")
     Dedup.releaseCache()
   }
 
-  test("persist registry cap is configurable (ADVICE r19)") {
+  test("rescan and recompute give the same pairs on adversarial documents") {
+    val base = "the quick brown fox jumps over the lazy dog"
+    val other = "a completely unrelated sentence about spark clusters and shuffles"
+    val texts = Seq(
+      null, "", "   ", "\t\n",
+      base, s"\t$base", s"$base\n", s"\n$base\t", base,
+      "the quick brown\u00A0fox jumps over the lazy dog",
+      "the quick brown\u3000fox jumps over the lazy dog",
+      "short text", "short text", "one",
+      other, other.dropRight(1), s"$other\t")
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType)))
+    val rows = texts.zipWithIndex.map { case (t, i) => Row(i.toLong + 1, t) }
+    // three partitions either way: an RDD-backed frame (no stats → rescan)
+    // and a local frame repartitioned (tiny stats → recompute)
+    val rescanIn = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val recomputeIn = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema).repartition(3)
+    assert(rescanIn.rdd.getNumPartitions == 3)
+    def pairs(out: DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def both(in: DataFrame) = (
+      pairs(Dedup.nearDuplicates(in, "doc_id", "text", w = 3, k = 8, b = 4,
+        threshold = 0.5)),
+      pairs(Dedup.fuzzyNearDuplicates(in, "doc_id", "text", w = 3, k = 8, b = 4,
+        threshold = 0.5)))
     Dedup.releaseCache()
-    withSQLConf("spark.graft.dedup.maxLivePersists" -> "2") {
-      (1 to 4).foreach { i =>
-        Dedup.nearDuplicates(docs(s"cap$i"), "doc_id", "text",
-          w = 2, k = 8, b = 4, threshold = 0.5, verify = "cached").count()
-      }
-      assert(Dedup.liveCacheCount == 2,
-        s"registry must cap at the configured 2, got ${Dedup.liveCacheCount}")
-    }
-    Dedup.releaseCache()
-  }
-
-  test("recompute verify persists nothing and matches the other strategies") {
-    Dedup.releaseCache()
-    val base = docs("rcmp")
-    def run(mode: String) =
-      Dedup.nearDuplicates(base, "doc_id", "text",
-        w = 2, k = 8, b = 4, threshold = 0.5, verify = mode)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val rc = run("recompute")
+    val (nearRc, fuzzyRc) = both(recomputeIn)
     assert(Dedup.liveCacheCount == 0,
       s"recompute must not register persists, got ${Dedup.liveCacheCount}")
-    assert(rc == run("cached") && rc == run("rescan"),
-      s"strategies disagree: recompute=$rc")
+    val (nearRs, fuzzyRs) = both(rescanIn)
+    assert(Dedup.liveCacheCount == 2,
+      s"rescan must persist each call's pairs, got ${Dedup.liveCacheCount}")
     Dedup.releaseCache()
+    assert(nearRc == nearRs, s"jaccard pairs: recompute=$nearRc rescan=$nearRs")
+    assert(fuzzyRc == fuzzyRs, s"fuzzy pairs: recompute=$fuzzyRc rescan=$fuzzyRs")
+    // not vacuous: the duplicate texts and the tab-edged copy pair up
+    assert(nearRc.exists(p => p._1 == 5L && p._2 == 9L), nearRc)
+    assert(nearRc.exists(p => p._1 == 5L && p._2 == 6L), nearRc)
+    assert(fuzzyRc.exists(p => p._1 == 5L && p._2 == 9L), fuzzyRc)
   }
 
   test("local mode ignores cluster executor confs for the auto budget") {
@@ -103,13 +123,8 @@ class DedupLifecycleSpec extends SparkSpec {
   test("auto falls back to rescan (not a fake measurement) without stats") {
     val d = docs("stats")
     // RDD-backed frames report the defaultSizeInBytes sentinel
-    val noStats = spark.createDataFrame(d.rdd, d.schema)
-    assert(Dedup.pickVerify(noStats, "auto", "spec") == "rescan")
+    assert(Dedup.rescan(noStats(d), "spec"))
     // a tiny local frame with real stats takes the cheap no-persist shape
-    // (r22: recompute replaced cached as the below-budget resolution)
-    assert(Dedup.pickVerify(d, "auto", "spec") == "recompute")
-    // the persist strategies stay explicitly selectable
-    assert(Dedup.pickVerify(d, "cached", "spec") == "cached")
-    assert(Dedup.pickVerify(d, "recompute", "spec") == "recompute")
+    assert(!Dedup.rescan(d, "spec"))
   }
 }

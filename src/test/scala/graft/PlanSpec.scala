@@ -259,14 +259,14 @@ class PlanSpec extends SparkSpec {
     // the r12 shape persisted the corpus-sized (id, shingles) projection
     // (28 GB + 10 GB spill at sf100) and shuffled it through both verify
     // joins; the r18 shape persists the candidate pairs and re-shingles
-    // only semi-filtered candidate docs (SCALE.md: 67.1 -> 23.1 s at sf100)
-    // verify="rescan" pins the corpus-scale shape explicitly — the auto
-    // switch would (correctly) pick the cached shape on this tiny fixture
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // only semi-filtered candidate docs (SCALE.md: 67.1 -> 23.1 s at sf100).
+    // An RDD-backed frame has no optimizer stats, so the engine takes the
+    // corpus-scale shape; the tiny fixture itself would verify by recompute
+    val parquet = spark.read.parquet(s"$sf/documents.parquet")
+    val docs = spark.createDataFrame(parquet.rdd, parquet.schema)
     graft.text.Dedup.releaseCache()
     val out = graft.text.Dedup.nearDuplicates(
-      docs, "doc_id", "text", w = 3, k = 4, b = 2, threshold = 0.5,
-      verify = "rescan")
+      docs, "doc_id", "text", w = 3, k = 4, b = 2, threshold = 0.5)
     val p = planOf(out)
     // the only cache read is the pair frame: (id_a, id_b) columns, never
     // a shingle-array column

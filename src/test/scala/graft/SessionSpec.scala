@@ -9,9 +9,11 @@ import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards for the one session factory ([[GraftSession]]): no other file
-  * under `src/` builds a session, and the mains whose records are compared
-  * across rounds (`Bench`, `Verify`) run under exactly the confs they ran
-  * under before the factory existed, plus [[GraftExtensions]]. */
+  * under `src/` builds a session, `src/main` reads no session conf or
+  * environment variable beyond a fixed set, and the mains whose records
+  * are compared across rounds (`Bench`, `Verify`) run under exactly the
+  * confs they ran under before the factory existed, plus
+  * [[GraftExtensions]]. */
 class SessionSpec extends AnyFunSuite {
 
   /** The repository root: the nearest directory at or above the working
@@ -34,6 +36,25 @@ class SessionSpec extends AnyFunSuite {
       }.toList
     assert(hits.size == 1 &&
       hits.head.startsWith("main/scala/graft/GraftSession.scala:"), hits)
+  }
+
+  /** Every capture of `pattern` in the Scala sources under `src/main/scala`. */
+  private def mainSourceCaptures(pattern: scala.util.matching.Regex): Set[String] = {
+    val main = repoRoot.resolve("src/main/scala")
+    Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap(p => pattern.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")))
+      .map(_.group(1)).toSet
+  }
+
+  test("no new session confs or environment variables are read") {
+    val graftConf = "\"(spark\\.graft\\.[\\w.]*\\w)".r
+    val envRead = "(?:sys\\.env\\.?\\w*|System\\.getenv)\\(\\s*\"([^\"]+)\"".r
+    assert(mainSourceCaptures(graftConf) == Set("spark.graft.broadcastThreshold"))
+    assert(mainSourceCaptures(envRead) == Set("SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_BCAST_THRESHOLD", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
+      "SPARK_GRAFT_BENCH_WARM", "SPARK_GRAFT_SHUFFLE_CODEC",
+      "SPARK_GRAFT_STATE_PROVIDER"))
   }
 
   /** Each key's effective value under `pairs`: the pair's value when set,

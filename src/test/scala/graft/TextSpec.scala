@@ -87,6 +87,30 @@ class TextSpec extends SparkSpec {
       threshold = 0.3).select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+    // banding arguments are checked while the frame is built, before any
+    // job: b > k would make r = 0 (every document collides in every band),
+    // b = 0 divides by zero, and k % b != 0 drops signature entries
+    def rejected(build: => Any, names: String*): Unit = {
+      val (e, jobs) = jobsStarted(intercept[IllegalArgumentException](build))
+      assert(jobs == 0)
+      names.foreach(n => assert(e.getMessage.contains(n), e.getMessage))
+    }
+    for ((k, b) <- Seq((4, 8), (8, 0), (8, 3))) {
+      rejected(Dedup.minhashCandidates(df, "doc_id", "text", w = 2, k = k, b = b),
+        s"k = $k", s"b = $b")
+      rejected(Dedup.nearDuplicates(df, "doc_id", "text", w = 2, k = k, b = b),
+        s"k = $k", s"b = $b")
+      rejected(Dedup.fuzzyNearDuplicates(df, "doc_id", "text", w = 2, k = k, b = b),
+        s"k = $k", s"b = $b")
+    }
+    rejected(Dedup.bands(col("sig"), 0, 2), "b = 0")
+    rejected(Dedup.bands(col("sig"), 4, 0), "r = 0")
+    for (cap <- Seq(0, -1))
+      rejected(Dedup.fuzzyNearDuplicates(df, "doc_id", "text", capChars = cap),
+        "capChars", s"$cap")
+    // k = 8, b = 4 is unaffected
+    assert(Dedup.minhashCandidates(df, "doc_id", "text", w = 2, k = 8, b = 4)
+      .as[(Long, Long)].collect().toSet.contains((1L, 2L)))
   }
 
   test("maxBucket: normal buckets give identical pairs; a degenerate bucket is dropped") {
