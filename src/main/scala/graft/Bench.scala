@@ -95,6 +95,12 @@ object Bench {
     "win_rank", "win_rolling_time", "topk_global", "explode_words",
     "text_quality", "dedup_near_pairs", "sim_bruteforce_topk")
 
+  /** Timed passes per run: `SPARK_GRAFT_BENCH_PASSES` (default 5), checked
+    * before the session is built, so a bad value fails at once rather than
+    * after the warm-up read. */
+  def passes(env: Option[String]): Int =
+    GraftSession.positiveInt("SPARK_GRAFT_BENCH_PASSES", env, 5)
+
   def main(args: Array[String]): Unit = {
     // The record line is machine-parsed JSON and every float lands in it
     // via f-interpolation, which formats in the JVM default locale — a
@@ -104,6 +110,7 @@ object Bench {
     val picked = if (args.nonEmpty) headline.filter(args.toSet) else headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus(32)
+    val passes = Bench.passes(sys.env.get("SPARK_GRAFT_BENCH_PASSES"))
     val spark = GraftSession.build(cpus)
 
     // Warm-up actions so JIT/classloading doesn't bill the first queries.
@@ -141,7 +148,6 @@ object Bench {
     // honest defense). The median alongside exposes whether the min was a
     // fluke. A failing query is recorded as "err", never as a wall time —
     // a broken query must not read as fast.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
     def pass(): Seq[(String, Either[String, Double])] = {
       val times = picked.map { name =>
         val fn = SparkEntry.queries(name)

@@ -18,20 +18,25 @@ import org.apache.spark.sql.SparkSession
   *   so every main runs the plans the test suite checks.
   *
   * A caller passes only the confs that are its own as `extra` pairs (the
-  * Verify dump's timestamp type, a bench's shuffle codec, a soak's state
-  * provider); they are applied after the shared ones.
+  * Verify dump's timestamp type, a bench's shuffle codec); they are
+  * applied after the shared ones.
   */
 object GraftSession {
 
   /** `SPARK_GRAFT_CPUS`, or the caller's own default when it is unset. */
   def cpus(default: Int): Int = cpus(sys.env.get("SPARK_GRAFT_CPUS"), default)
 
-  /** [[cpus]] over a given value of `SPARK_GRAFT_CPUS`: a positive integer,
-    * else an error that names the variable. */
-  def cpus(env: Option[String], default: Int): Int = env.fold(default) { v =>
-    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-  }
+  /** [[cpus]] over a given value of `SPARK_GRAFT_CPUS`. */
+  def cpus(env: Option[String], default: Int): Int =
+    positiveInt("SPARK_GRAFT_CPUS", env, default)
+
+  /** The value `env` of the environment variable `name`: a positive
+    * integer, `default` when unset, else an error that names the variable. */
+  def positiveInt(name: String, env: Option[String], default: Int): Int =
+    env.fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'"))
+    }
 
   /** The conf pairs [[build]] applies, in order (`spark.master` first). */
   def conf(cpus: Int, extra: (String, String)*): Seq[(String, String)] =

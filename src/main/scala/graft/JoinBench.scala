@@ -14,11 +14,13 @@ import graft.GroupByBench.{reclaim, select, shuffleCodec}
   * r15: joins go through `LazyFrame.join` with NO session threshold pin —
   * the library's size-driven broadcast hint (LazyFrame.autoBroadcast,
   * default cap 256 MB) must reproduce the fast column on its own. The
-  * fallback experiment is `SPARK_GRAFT_BCAST_THRESHOLD=0` (disables the
-  * hint AND leaves Spark at its 10 MB default). Also r15, per the H2O data
-  * spec: id5 is the STRING FORM of id2 (as id4/id5/id6 mirror id1/id2/id3
-  * in the reference datagen), so the single medium table serves j2/j3/j4
-  * with unique keys on both columns and j4's match rate equals j2's.
+  * fallback experiment pins `spark.graft.broadcastThreshold=0` (disables
+  * the hint AND leaves Spark at its 10 MB default), e.g. as
+  * `-Dspark.graft.broadcastThreshold=0` in the JVM options. Also r15, per
+  * the H2O data spec: id5 is the STRING FORM of id2 (as id4/id5/id6
+  * mirror id1/id2/id3 in the reference datagen), so the single medium
+  * table serves j2/j3/j4 with unique keys on both columns and j4's match
+  * rate equals j2's.
   *
   * Usage: runMain graft.JoinBench [N] [query...]  (default 1e7, all five).
   * At N=1e9 set SPARK_GRAFT_SHUFFLE_CODEC=zstd — j5's two-sided ~1.6e9-row

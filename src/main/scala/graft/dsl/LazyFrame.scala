@@ -122,9 +122,9 @@ final class LazyFrame(val df: DataFrame) {
     * `suffix` (default "_right") instead of becoming ambiguous.
     *
     * Size-driven automatic broadcast (r15): when one side's Catalyst size
-    * estimate is under `spark.graft.broadcastThreshold` /
-    * `SPARK_GRAFT_BCAST_THRESHOLD` and the other side dwarfs it, that side
-    * is broadcast-hinted — see [[LazyFrame.autoBroadcast]]. This closes
+    * estimate is under `spark.graft.broadcastThreshold` and the other
+    * side dwarfs it, that side is broadcast-hinted — see
+    * [[LazyFrame.autoBroadcast]]. This closes
     * the measured 6.8× cliff where Spark's 10 MB default threshold turned
     * every medium-dim star join into a two-sided full shuffle (BASELINE.md,
     * 1e9 join ladder).
@@ -1161,13 +1161,11 @@ object LazyFrame {
     (num.toDouble * mult).toLong
   }
 
-  /** Broadcast cap in bytes: session conf `spark.graft.broadcastThreshold`
-    * beats env `SPARK_GRAFT_BCAST_THRESHOLD` beats the heap-derated
-    * default ([[derateCap]] of the driver JVM's max heap). Zero or
-    * negative disables the automatic hint entirely. */
+  /** Broadcast cap in bytes: session conf `spark.graft.broadcastThreshold`,
+    * else the heap-derated default ([[derateCap]] of the driver JVM's max
+    * heap). Zero or negative disables the automatic hint entirely. */
   private[graft] def broadcastCap(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.broadcastThreshold")
-      .orElse(sys.env.get("SPARK_GRAFT_BCAST_THRESHOLD"))
       .map(parseBytes)
       .getOrElse(derateCap(Runtime.getRuntime.maxMemory))
 

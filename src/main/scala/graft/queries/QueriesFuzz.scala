@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.dsl.LazyFrame
 
 /** Differential fuzzing against the DuckDB oracle (r15 verdict task 2,
-  * second prong — the in-JVM prong is graft.testing.PlanFuzz).
+  * second prong — the in-JVM prong is the test suite's PlanFuzzSpec, whose
+  * generator lives in test scope).
   *
   * A FIXED master seed deterministically generates `nCases` random plans
   * over the real testdata tables (lineitem/orders/customer). Each case is

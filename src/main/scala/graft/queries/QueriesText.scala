@@ -350,9 +350,9 @@ object QueriesText {
 
     "text_langid" -> {
       def ratio(words: Seq[String]) =
-        s"""(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+        s"""(len(list_filter($tokensSql,
            |  t -> t IN (${words.map(w => s"'$w'").mkString(",")})))
-           | / greatest(len(string_split_regex(lower(trim(text)), '\\s+')), 1))""".stripMargin
+           | / greatest(len($tokensSql), 1))""".stripMargin
       val en = ratio(TA.stopwordsEn); val es = ratio(TA.stopwordsEs)
       val de = ratio(TA.stopwordsDe); val fr = ratio(TA.stopwordsFr)
       s"""SELECT doc_id, lang,

@@ -36,16 +36,11 @@ object TextAnalysis {
     size(regexp_extract_all(text, lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
   /** Stopword hit ratio over a given stopword list — building block for
-    * language-ID and quality scoring. */
-  // r22: tokens() (empties dropped) replaces the bare split (empties kept),
-  // removing 4 per-row Pattern.compiles from langId. Hits agree (an empty
-  // string is never a stopword), but the denominator does not wherever
-  // whitespace other than a space leads or trails the text: `trim` strips
-  // spaces only, so the old split kept an empty token there. Observed:
-  // "\tthe cat" and "the cat\n" were 1/3 and are 1/2; " \tthe cat \n" was
-  // 0.25 and is 0.5. Blank text gives 0 and null gives null either way.
-  // Pinned in TokensExprSpec; which semantics is right is open in ROADMAP.md,
-  // and the text_langid oracle SQL still mirrors the old split.
+    * language-ID and quality scoring. The denominator is the [[tokens]]
+    * count (at least 1), so whitespace that leads or trails the text adds
+    * no empty token: "\tthe cat", "the cat\n" and " \tthe cat \n" all give
+    * 0.5. Blank text gives 0 and null gives null. The `text_langid` oracle
+    * SQL divides by the same count (`QueriesText.tokensSql`). */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)
     val hits = size(filter(toks, t => t.isin(stopwords.map(lit(_).cast("string")): _*)))

@@ -566,15 +566,11 @@ class PlanSpec extends SparkSpec {
     // big rig (bench JVM runs at 8 GiB): full 256 MB ceiling
     assert(LazyFrame.derateCap(8L << 30) == 256 * mb)
     assert(LazyFrame.derateCap(96L << 30) == 256 * mb)
-    // with no conf/env pin the session cap IS the derated value for this
-    // JVM's real heap (the default path, not a fixed constant). Skip the
-    // default-path assert when the env knob is set — broadcastCap
-    // consults SPARK_GRAFT_BCAST_THRESHOLD too, and a rig legitimately
-    // running with it pinned must not red this test.
+    // with no conf pin the session cap IS the derated value for this
+    // JVM's real heap (the default path, not a fixed constant)
     assert(spark.conf.getOption("spark.graft.broadcastThreshold").isEmpty)
-    if (sys.env.get("SPARK_GRAFT_BCAST_THRESHOLD").isEmpty)
-      assert(LazyFrame.broadcastCap(spark) ==
-        LazyFrame.derateCap(Runtime.getRuntime.maxMemory))
+    assert(LazyFrame.broadcastCap(spark) ==
+      LazyFrame.derateCap(Runtime.getRuntime.maxMemory))
   }
 
   test("auto-broadcast: hint does NOT fire when the in-memory estimate exceeds the derated cap") {

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards for the one session factory ([[GraftSession]]): no other file
   * under `src/` builds a session, `src/main` reads no session conf or
-  * environment variable beyond a fixed set, and the mains whose records
+  * environment variable beyond a fixed set and declares no main beyond a
+  * fixed set, and the mains whose records
   * are compared across rounds (`Bench`, `Verify`) run under exactly the
   * confs they ran under before the factory existed, plus
   * [[GraftExtensions]]. */
@@ -52,9 +53,8 @@ class SessionSpec extends AnyFunSuite {
     val envRead = "(?:sys\\.env\\.?\\w*|System\\.getenv)\\(\\s*\"([^\"]+)\"".r
     assert(mainSourceCaptures(graftConf) == Set("spark.graft.broadcastThreshold"))
     assert(mainSourceCaptures(envRead) == Set("SPARK_GRAFT_CPUS",
-      "SPARK_GRAFT_BCAST_THRESHOLD", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
-      "SPARK_GRAFT_BENCH_WARM", "SPARK_GRAFT_SHUFFLE_CODEC",
-      "SPARK_GRAFT_STATE_PROVIDER"))
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
+      "SPARK_GRAFT_BENCH_WARM", "SPARK_GRAFT_SHUFFLE_CODEC"))
   }
 
   /** Each key's effective value under `pairs`: the pair's value when set,
@@ -113,5 +113,31 @@ class SessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
         e.getMessage)
     }
+    // the bench's pass count goes through the same parser, before the
+    // session is built: "0" would leave every key with no samples
+    assert(Bench.passes(None) == 5)
+    assert(Bench.passes(Some("2")) == 2)
+    for (bad <- Seq("0", "-1", "abc", "")) {
+      val e = intercept[IllegalArgumentException](Bench.passes(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_PASSES") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("the library declares exactly the six mains") {
+    // each `def main(` belongs to the last object declared before it
+    val objectDecl = "(?m)^\\s*(?:\\w+\\s+)*object\\s+(\\w+)".r
+    val main = repoRoot.resolve("src/main/scala")
+    val owners = Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        "def main\\(".r.findAllMatchIn(text).map { m =>
+          objectDecl.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption
+            .fold(s"<no object> ${main.relativize(p)}")(_.group(1))
+        }
+      }.toList
+    assert(owners.sorted == Seq("Bench", "GroupByBench", "JoinBench", "PlanDump",
+      "ScaleData", "Verify"), owners)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.testing.StreamFuzz
 
 /** Streaming-vs-batch differential fuzzing (r17 verdict task 4; late-data
@@ -8,12 +10,11 @@ import graft.testing.StreamFuzz
   * Seed ranges: a smoke block per family always runs; the full ranges
   * noted below require SPARK_GRAFT_SOAK=1 (see [[Soak]]).
   *
-  *  - v1 (seeds 1-220 here, 221-600 via StreamFuzzSoak): time-contiguous
-  *    replays of watermarked tumbling/hopping aggregations in complete and
-  *    append modes, session windows, streaming dedup and
-  *    mapGroupsWithState folds, compared as exact multisets against the
-  *    batch equivalent.
-  *  - LATE (seeds 1-200 here): a drawn fraction of rows is relocated into
+  *  - v1 (seeds 1-600): time-contiguous replays of watermarked
+  *    tumbling/hopping aggregations in complete and append modes, session
+  *    windows, streaming dedup and mapGroupsWithState folds, compared as
+  *    exact multisets against the batch equivalent.
+  *  - LATE (seeds 1-200): a drawn fraction of rows is relocated into
   *    later files so rows genuinely arrive behind the watermark; the
   *    oracle models Spark's probe-verified drop/keep semantics (late
   *    filter against the PREVIOUS batch's watermark, per (row, window)
@@ -21,9 +22,17 @@ import graft.testing.StreamFuzz
   *    proto-session end even in complete mode). The sweeps assert they are
   *    not vacuous: a healthy share of seeds must actually DROP rows, and a
   *    healthy share must carry late-but-kept rows.
-  *  - JOIN (seeds 1-150 here): stream-stream interval joins (buffered
+  *  - JOIN (seeds 1-150): stream-stream interval joins (buffered
   *    two-sided state + watermark eviction) and stream-static broadcast
   *    enrichment, against batch range-join / left-join oracles.
+  *  - JOIN v2 (seeds 1-150): outer interval joins with one-sided late rows.
+  *  - RECOVERY (seeds 1-40): kill/restart cycles against the uninterrupted
+  *    run.
+  *
+  * The ROCKSDB blocks re-run v1 1-100, LATE 1-100, JOIN 1-100, JOIN v2
+  * 1-50 and RECOVERY 1-30 on `RocksDBStateStoreProvider`, the production
+  * state backend (the other blocks use Spark's default HDFS-backed
+  * provider). They are soak blocks too.
   *
   * Grammar and determinism invariants are documented on
   * [[graft.testing.StreamFuzz]]. A failing seed reproduces standalone:
@@ -75,6 +84,8 @@ class StreamFuzzSpec extends SparkSpec {
   soakTest("stream fuzz: seeds 26-110 match their batch oracle") { sweep(26 to 110) }
   soakTest("stream fuzz: seeds 111-165 match their batch oracle") { sweep(111 to 165) }
   soakTest("stream fuzz: seeds 166-220 match their batch oracle") { sweep(166 to 220) }
+  soakTest("stream fuzz: seeds 221-410 match their batch oracle") { sweep(221 to 410) }
+  soakTest("stream fuzz: seeds 411-600 match their batch oracle") { sweep(411 to 600) }
 
   test("stream fuzz LATE: seeds 1-25 match the drop-model oracle") {
     sweepLate(1 to 25)
@@ -150,5 +161,50 @@ class StreamFuzzSpec extends SparkSpec {
   }
   soakTest("stream fuzz RECOVERY: seeds 11-40 match the uninterrupted run") {
     sweepRecovery(11 to 40)
+  }
+
+  /** `body` with new streaming queries keeping their state in RocksDB. */
+  private def onRocksDB[T](body: => T): T =
+    withSQLConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  // the ROCKSDB blocks are soak-only; this keeps their conf honest in the
+  // default suite: a stateful query started under it reports RocksDB's
+  // own state-store metrics, and one started outside it does not
+  test("the ROCKSDB blocks' conf puts a new query's state in RocksDB") {
+    import spark.implicits._
+    val in = java.nio.file.Files.createTempDirectory("graft-rocksdb-conf")
+    try {
+      Seq(1L, 2L, 2L).toDF("k").write.mode("overwrite").parquet(in.toString)
+      def stateMetrics(): Set[String] = {
+        val q = spark.readStream.schema("k LONG").parquet(in.toString)
+          .groupBy("k").count()
+          .writeStream.format("memory").queryName("rocksdb_conf_probe")
+          .outputMode("complete").start()
+        try {
+          q.processAllAvailable()
+          q.lastProgress.stateOperators.head.customMetrics.keySet.asScala.toSet
+        } finally q.stop()
+      }
+      val onRocks = onRocksDB(stateMetrics())
+      assert(onRocks.exists(_.startsWith("rocksdb")), onRocks)
+      assert(!stateMetrics().exists(_.startsWith("rocksdb")))
+    } finally StreamFuzz.deleteRec(in)
+  }
+
+  soakTest("stream fuzz ROCKSDB: seeds 1-100 match their batch oracle") {
+    onRocksDB(sweep(1 to 100))
+  }
+  soakTest("stream fuzz ROCKSDB LATE: seeds 1-100 match the drop-model oracle") {
+    onRocksDB(sweepLate(1 to 100))
+  }
+  soakTest("stream fuzz ROCKSDB JOIN: seeds 1-100 match their batch oracle") {
+    onRocksDB(sweepJoin(1 to 100))
+  }
+  soakTest("stream fuzz ROCKSDB JOIN v2 (outer + late): seeds 1-50 match the oracle") {
+    onRocksDB(sweepJoinV2(1 to 50))
+  }
+  soakTest("stream fuzz ROCKSDB RECOVERY: seeds 1-30 match the uninterrupted run") {
+    onRocksDB(sweepRecovery(1 to 30))
   }
 }

@@ -8,8 +8,9 @@ import graft.queries.util
   * `filter(split(lower(trim(text)), "\\s+"), t => t =!= "")` — and the
   * derived TextAnalysis ops (stopwordRatio, fingerprint, minShingleHash)
   * must compute what their r21 Column compositions computed, except
-  * stopwordRatio on text with leading or trailing tab / newline, which the
-  * last test pins at its current value.
+  * stopwordRatio on text with leading or trailing tab / newline: its
+  * denominator is the tokens() count, which drops the empty token the r21
+  * split kept there, and the last test pins that.
   */
 class TokensExprSpec extends SparkSpec {
 
@@ -97,10 +98,10 @@ class TokensExprSpec extends SparkSpec {
   }
 
   test("stopwordRatio on leading / trailing tab or newline is pinned") {
-    // the r21 split kept the empty token that a leading tab or trailing
-    // newline leaves after `trim`, so its denominator was one larger:
-    // "\tthe cat" gave 1/3 there and gives 1/2 now. Pinned at the current
-    // value; which one is right is open in ROADMAP.md.
+    // the denominator is the tokens() count: the r21 split kept the empty
+    // token that a leading tab or trailing newline leaves after `trim`, so
+    // "\tthe cat" gave 1/3 there and gives 1/2 now, as does the
+    // text_langid oracle SQL, which divides by `tokensSql`'s count.
     val got = wsEdgeDf.orderBy("id").select(
       TextAnalysis.stopwordRatio(col("s"), TextAnalysis.stopwordsEn))
       .collect().map(_.getDouble(0)).toSeq

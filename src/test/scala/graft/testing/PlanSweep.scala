@@ -14,7 +14,8 @@ import graft.GraftSession
   * eval markers. The checklist in OPTIMIZATION_r21.md is generated from this
   * sweep.
   *
-  * Usage: runMain graft.testing.PlanSweep <outCsv> [sfDir]
+  * Usage: sbt "Test/runMain graft.testing.PlanSweep <outCsv> [sfDir]"
+  * (a test-scope runner: the library ships no test harness).
   * Keys whose very CONSTRUCTION executes jobs (stream_* run a streaming
   * query to produce their result frame) are skipped — their plans are
   * pinned by the streaming specs instead.
