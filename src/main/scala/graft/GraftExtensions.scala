@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * equivalent), the deployment mode a shared 1000-executor cluster uses,
   * where per-notebook `register()` calls don't scale. It installs:
   *  - graft's native functions, callable from SQL;
+  *  - [[graft.plans.BroadcastBySize]], the pre-CBO optimizer rule that
+  *    broadcasts a join side small next to the other, for every join the
+  *    optimizer sees (DataFrame, SQL and LazyFrame);
   *  - [[graft.plans.SampleMaterializedSortInput]], the query-stage
   *    preparation rule that lets a global sort sample a materialized stage
   *    instead of re-running a costly kernel. */
@@ -15,6 +18,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     (graft.functions.GraftFunctions.all ++ graft.functions.PolarsSqlShims.all)
       .foreach(ext.injectFunction)
+    ext.injectPreCBORule(_ => graft.plans.BroadcastBySize)
     ext.injectQueryStagePrepRule(_ => graft.plans.SampleMaterializedSortInput)
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *   inference and scan time, so they are set here and never inside a
   *   query lambda.
   * - AQE on, UI off.
-  * - [[GraftExtensions]]: graft's functions in SQL and its planner rule,
+  * - [[GraftExtensions]]: graft's functions in SQL and its planner rules,
   *   so every main runs the plans the test suite checks.
   *
   * A caller passes only the confs that are its own as `extra` pairs (the

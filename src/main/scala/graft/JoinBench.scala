@@ -12,11 +12,11 @@ import graft.GroupByBench.{reclaim, select, shuffleCodec}
   * genuine N:N shuffle join.
   *
   * r15: joins go through `LazyFrame.join` with NO session threshold pin —
-  * the library's size-driven broadcast hint (LazyFrame.autoBroadcast,
-  * default cap 256 MB) must reproduce the fast column on its own. The
-  * fallback experiment pins `spark.graft.broadcastThreshold=0` (disables
-  * the hint AND leaves Spark at its 10 MB default), e.g. as
-  * `-Dspark.graft.broadcastThreshold=0` in the JVM options. Also r15, per
+  * the engine's size-driven broadcast (graft.plans.BroadcastBySize, cap
+  * 256 MB on this rig's heap) must reproduce the fast column on its own.
+  * The fallback experiment sets Spark's own threshold to its 10 MB
+  * default explicitly, which turns that rule off, e.g. as
+  * `-Dspark.sql.autoBroadcastJoinThreshold=10m` in the JVM options. Also r15, per
   * the H2O data spec: id5 is the STRING FORM of id2 (as id4/id5/id6
   * mirror id1/id2/id3 in the reference datagen), so the single medium
   * table serves j2/j3/j4 with unique keys on both columns and j4's match

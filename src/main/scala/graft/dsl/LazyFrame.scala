@@ -120,23 +120,9 @@ final class LazyFrame(val df: DataFrame) {
   /** polars join: key columns coalesce (Spark using-join), and right-side
     * NON-key columns whose names collide with the left get the polars
     * `suffix` (default "_right") instead of becoming ambiguous.
-    *
-    * Size-driven automatic broadcast (r15): when one side's Catalyst size
-    * estimate is under `spark.graft.broadcastThreshold` and the other
-    * side dwarfs it, that side is broadcast-hinted — see
-    * [[LazyFrame.autoBroadcast]]. This closes
-    * the measured 6.8× cliff where Spark's 10 MB default threshold turned
-    * every medium-dim star join into a two-sided full shuffle (BASELINE.md,
-    * 1e9 join ladder).
-    *
-    * The default cap is DERATED against driver heap (r17,
-    * [[LazyFrame.derateCap]]): the size estimate is compressed on-disk
-    * bytes while the broadcast relation is collected through the driver
-    * 5-20× larger and capped by Spark at a hard 8 GB, so a fixed 256 MB
-    * default would OOM a cluster-default 1 GB driver. The default is
-    * `maxHeap/30` clamped to [16 MB, 256 MB] — ~34 MB on a 1 GB driver,
-    * the full 256 MB on the ≥7.5 GB bench rig. Set the conf explicitly to
-    * trade driver memory for more broadcasting. */
+    * Which side broadcasts is the engine's decision
+    * ([[graft.plans.BroadcastBySize]]), made once per query when it is
+    * optimized, the same for every join API. */
   def join(other: LazyFrame, on: Seq[String], how: String = "inner",
            suffix: String = "_right"): LazyFrame = {
     val leftCols = df.columns.toSet
@@ -144,15 +130,12 @@ final class LazyFrame(val df: DataFrame) {
       if (!on.contains(c) && leftCols.contains(c)) d.withColumnRenamed(c, c + suffix)
       else d
     }
-    val (l, r) = LazyFrame.autoBroadcast(df, renamed, how)
-    LazyFrame(l.join(r, on, how))
+    LazyFrame(df.join(renamed, on, how))
   }
 
-  /** Condition join; same automatic broadcast hinting as [[join]]. */
-  def joinOn(other: LazyFrame, cond: Column, how: String = "inner"): LazyFrame = {
-    val (l, r) = LazyFrame.autoBroadcast(df, other.df, how)
-    LazyFrame(l.join(r, cond, how))
-  }
+  /** Condition join. */
+  def joinOn(other: LazyFrame, cond: Column, how: String = "inner"): LazyFrame =
+    LazyFrame(df.join(other.df, cond, how))
 
   /** Broadcast the (small) right side — polars has no cluster notion; at
     * 100 TB this is the difference between a map-side join and a shuffle. */
@@ -161,15 +144,11 @@ final class LazyFrame(val df: DataFrame) {
 
   def crossJoin(other: LazyFrame): LazyFrame = LazyFrame(df.crossJoin(other.df))
 
-  def semiJoin(other: LazyFrame, on: Seq[String]): LazyFrame = {
-    val (l, r) = LazyFrame.autoBroadcast(df, other.df, "left_semi")
-    LazyFrame(l.join(r, on, "left_semi"))
-  }
+  def semiJoin(other: LazyFrame, on: Seq[String]): LazyFrame =
+    LazyFrame(df.join(other.df, on, "left_semi"))
 
-  def antiJoin(other: LazyFrame, on: Seq[String]): LazyFrame = {
-    val (l, r) = LazyFrame.autoBroadcast(df, other.df, "left_anti")
-    LazyFrame(l.join(r, on, "left_anti"))
-  }
+  def antiJoin(other: LazyFrame, on: Seq[String]): LazyFrame =
+    LazyFrame(df.join(other.df, on, "left_anti"))
 
   /** polars join_where (arbitrary inequality predicates,
     * crates/polars-plan/src/dsl/plan.rs:85). Catalyst extracts any equi-parts;
@@ -1105,134 +1084,6 @@ final class LazyFrame(val df: DataFrame) {
 
 object LazyFrame {
   def apply(df: DataFrame): LazyFrame = new LazyFrame(df)
-
-  // ---- size-driven automatic broadcast (r15) ------------------------------
-
-  /** Ceiling on the derated default broadcast cap: 256 MB. Measured basis
-    * (BASELINE.md, 1e9 join ladder): Spark's conservative 10 MB
-    * `autoBroadcastJoinThreshold` silently turns a 15-20 MB dim join into
-    * a two-sided 1e9-row shuffle — 764.9 s vs 112.8 s broadcast. */
-  private val BroadcastCapCeiling: Long = 256L * 1024 * 1024
-
-  /** Floor on the derated default cap: 16 MB — always above Spark's 10 MB
-    * default so the measured star-join cliff stays closed even on a
-    * minimally-sized driver. */
-  private val BroadcastCapFloor: Long = 16L * 1024 * 1024
-
-  /** Assumed on-disk → in-memory inflation of a broadcast hash relation
-    * built from a compressed parquet scan. Catalyst's `sizeInBytes` for a
-    * file scan is COMPRESSED FILE BYTES, but the relation is collected
-    * through the driver and materialized as JVM rows + hash index,
-    * typically 5-20× larger; 10× is the design point the derated default
-    * budgets for. */
-  private val BroadcastInflation = 10L
-
-  /** Derate the default broadcast cap against the driver's max heap: the
-    * broadcast relation ([[BroadcastInflation]]× the on-disk estimate the
-    * cap is compared against) is collected through the driver and must
-    * also stay well under Spark's hard 8 GB broadcast-relation limit, so
-    * the default budgets at most ~1/3 of the heap for it:
-    * `cap = heap / (3 × inflation)`, clamped to
-    * [[[BroadcastCapFloor]], [[BroadcastCapCeiling]]]. A 1 GB driver
-    * (cluster default) gets ~34 MB; ≥7.5 GB drivers (the bench rig) get
-    * the full 256 MB. Rigs that want the old fixed 256 MB on a small
-    * driver set `spark.graft.broadcastThreshold=256m` explicitly and
-    * accept the OOM tradeoff. */
-  private[graft] def derateCap(maxHeapBytes: Long): Long = {
-    val byHeap = maxHeapBytes / (3L * BroadcastInflation)
-    math.max(BroadcastCapFloor, math.min(BroadcastCapCeiling, byHeap))
-  }
-
-  /** Minimum big-side/small-side size ratio before the hint fires. A
-    * broadcast ships the build side once per executor, so broadcasting a
-    * 200 MB side to dodge a 250 MB shuffle LOSES on a 1000-executor
-    * cluster (200 GB of network for 450 MB of shuffle saved); the hint is
-    * only a win when the probe side dwarfs the build side. */
-  private val BroadcastRatio = 4
-
-  /** Parse a byte size: plain digits, or a k/m/g suffix (binary units). */
-  private[graft] def parseBytes(s: String): Long = {
-    val t = s.trim.toLowerCase
-    val (num, mult) =
-      if (t.endsWith("k")) (t.dropRight(1), 1L << 10)
-      else if (t.endsWith("m")) (t.dropRight(1), 1L << 20)
-      else if (t.endsWith("g")) (t.dropRight(1), 1L << 30)
-      else (t, 1L)
-    (num.toDouble * mult).toLong
-  }
-
-  /** Broadcast cap in bytes: session conf `spark.graft.broadcastThreshold`,
-    * else the heap-derated default ([[derateCap]] of the driver JVM's max
-    * heap). Zero or negative disables the automatic hint entirely. */
-  private[graft] def broadcastCap(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.broadcastThreshold")
-      .map(parseBytes)
-      .getOrElse(derateCap(Runtime.getRuntime.maxMemory))
-
-  /** Plans bigger than this many logical nodes skip the optimizer run in
-    * [[estimatedBytes]]. Measured basis (BroadcastChainProbe, SCALE.md):
-    * optimizing per join call is O(N²) on an iteratively built join chain
-    * — ~70 ms/join at depth 50 and growing, vs ~7 ms flat for the
-    * analyzed-stats fallback. */
-  private val PlanNodeBudget = 64
-
-  /** Catalyst's size estimate for the frame's logical plan: for a file
-    * scan these are the parquet footer/file bytes (the same bytes
-    * [[graft.sources.ParquetMeta]] reads), for a materialized cache the
-    * in-memory bytes, and for anything unknown a huge default — which
-    * correctly suppresses the hint. Driver-side plan math only; no job.
-    *
-    * Normally reads the OPTIMIZED plan's stats (column pruning reaches the
-    * scan, so a 2-column projection of a wide table estimates small —
-    * that precision is what lets the hint fire on projected dims). But
-    * running the full optimizer per join call is O(N²) on an iteratively
-    * built chain, so past [[PlanNodeBudget]] nodes this falls back to the
-    * ALREADY-ANALYZED plan's stats: coarser (no pruning; with CBO off a
-    * join node estimates as the product of its children). The deep side
-    * only ever looks BIGGER, so it can never itself be broadcast by
-    * mistake; the residual error is one-sided and bounded — an inflated
-    * probe-side estimate can pass the [[BroadcastRatio]] guard for a
-    * ≤cap dim that a precise estimate would have declined, shipping that
-    * dim (itself bounded by the heap-derated cap) unnecessarily. Shallow
-    * dims keep the precise column-pruned optimized path. */
-  private[graft] def estimatedBytes(df: DataFrame): BigInt = {
-    val analyzed = df.queryExecution.analyzed
-    var nodes = 0
-    analyzed.foreach(_ => nodes += 1)
-    if (nodes > PlanNodeBudget) analyzed.stats.sizeInBytes
-    else df.queryExecution.optimizedPlan.stats.sizeInBytes
-  }
-
-  /** Attach a broadcast HINT to a join side when (a) the join type can
-    * build on that side, (b) Catalyst's size estimate is under
-    * [[broadcastCap]], and (c) the other side is at least [[BroadcastRatio]]×
-    * bigger (see the ratio note above). A hint, not a forced plan: Catalyst
-    * drops it where the join type can't build that side, and AQE can still
-    * re-plan. Returns the (possibly hinted) sides. This is what makes a
-    * star join over a >10 MB dim a map-side join out of the box instead of
-    * silently degrading to a full two-sided shuffle at the Spark default
-    * threshold. */
-  private[graft] def autoBroadcast(left: DataFrame, right: DataFrame,
-                                   how: String): (DataFrame, DataFrame) = {
-    // streaming plans are sized by the micro-batch planner at run time, not
-    // here — and a stream-static join already builds the static side
-    if (left.isStreaming || right.isStreaming) return (left, right)
-    val cap = BigInt(broadcastCap(left.sparkSession))
-    if (cap <= 0) return (left, right)
-    val h = how.toLowerCase.replace("_", "").replace("-", "")
-    // sides Spark's planner accepts as the broadcast build side per type
-    val rightOk = Set("inner", "cross", "left", "leftouter", "semi",
-      "leftsemi", "anti", "leftanti")(h)
-    val leftOk = Set("inner", "cross", "right", "rightouter")(h)
-    if (!rightOk && !leftOk) return (left, right) // full outer: no build side
-    val ls = estimatedBytes(left)
-    val rs = estimatedBytes(right)
-    val hintRight = rightOk && rs <= cap && ls >= rs * BroadcastRatio
-    val hintLeft = leftOk && ls <= cap && rs >= ls * BroadcastRatio
-    if (hintRight && (!hintLeft || rs <= ls)) (left, right.hint("broadcast"))
-    else if (hintLeft) (left.hint("broadcast"), right)
-    else (left, right)
-  }
 
   /** Scan parquet. A single file's schema is read from its footer on the
     * driver (no Spark job); a directory, a hive-partitioned path or a glob

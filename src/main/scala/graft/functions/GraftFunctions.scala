@@ -19,13 +19,15 @@ import org.apache.spark.sql.types.IntegerType
   */
 object GraftFunctions {
 
-  private def intLit(e: Expression, fn: String, arg: String): Int = e match {
+  /** A literal argument of a SQL function, or an error naming `fn` and `arg`;
+    * shared with [[PolarsSqlShims]]. */
+  private[functions] def intLit(e: Expression, fn: String, arg: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$fn: $arg must be an integer literal, got $other")
   }
 
-  private def strLit(e: Expression, fn: String, arg: String): String = e match {
+  private[functions] def strLit(e: Expression, fn: String, arg: String): String = e match {
     case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
     case other => throw new IllegalArgumentException(
       s"$fn: $arg must be a string literal, got $other")

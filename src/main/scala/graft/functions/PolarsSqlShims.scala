@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.IntegerType
+
+import GraftFunctions.{intLit, strLit}
 
 /** polars-SQL dialect shims (reference:
   * crates/polars-sql/src/functions.rs:930-1125): the function names polars'
@@ -30,18 +31,6 @@ object PolarsSqlShims {
 
   private def c(e: Expression): Column = Bridge.column(e)
   private def x(col: Column): Expression = Bridge.eagerExpression(col)
-
-  private def strLit(e: Expression, fn: String, arg: String): String = e match {
-    case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
-    case other => throw new IllegalArgumentException(
-      s"$fn: $arg must be a string literal, got $other")
-  }
-
-  private def intLit(e: Expression, fn: String, arg: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $arg must be an integer literal, got $other")
-  }
 
   /** chrono strftime codes → java.time pattern (literal letters quoted). */
   private[graft] def chronoToJava(fmt: String): String = {

@@ -472,79 +472,158 @@ class PlanSpec extends SparkSpec {
   // ---- size-driven automatic broadcast (r15 top task) ----------------------
   // Evidence basis: at Spark's 10 MB autoBroadcastJoinThreshold a 15-20 MB
   // dim silently degrades a 1e9-row star join to a two-sided shuffle —
-  // 764.9 s vs 112.8 s broadcast (BASELINE.md). The library must attach the
-  // hint itself, from Catalyst's own size estimate, with NO manual hint and
-  // NO session threshold pin.
+  // 764.9 s vs 112.8 s broadcast (BASELINE.md). The engine rule
+  // graft.plans.BroadcastBySize broadcasts such a dim from Catalyst's own
+  // size estimate, with NO manual hint, on every join API; an explicit
+  // Spark threshold turns it off.
+
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+  private val mb = 1L << 20
+
+  /** A parquet dim of `rows` rows: a key and two incompressible xxhash64
+    * payload columns, so its on-disk size grows with `rows`. */
+  private def writeDim(dir: String, rows: Long): String = {
+    spark.range(rows).select(col("id").as("k"),
+        xxhash64(col("id")).as("p1"), xxhash64(col("id"), lit(7)).as("p2"))
+      .write.mode("overwrite").parquet(dir)
+    dir
+  }
+  // ~40 MB: over a 1 GB driver's derated cap, under the 256 MB ceiling
+  private lazy val bigDim = writeDim("/tmp/graft_test/bcast_dim", 2000000)
+  // 10-16 MB: over Spark's 10 MB default, under the 16 MB floor of the
+  // derated cap, so the rule broadcasts it whatever the test JVM's heap
+  private lazy val midDim = writeDim("/tmp/graft_test/bcast_dim_mid", 650000)
+
+  private def onDisk(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  private def fact = spark.range(100000000L)
+    .select(pmod(col("id"), lit(2000000L)).as("k"), col("id").as("v"))
+
+  /** The side the rule hints on each join of `df` at `cap` bytes ("left",
+    * "right" or "none"), applied to `df`'s plan as optimized with the rule
+    * off (an explicit Spark threshold). `df` must not be planned yet. */
+  private def hintedAt(cap: Long)(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val optimized = withSQLConf(threshold -> "-1")(df.queryExecution.optimizedPlan)
+    graft.plans.BroadcastBySize(optimized, cap).collect { case j: Join =>
+      if (j.hint.rightHint.isDefined) "right" else if (j.hint.leftHint.isDefined) "left" else "none"
+    }
+  }
+
+  /** The four LazyFrame join APIs over `fact` and `dim`, each built fresh. */
+  private def lazyJoins(dim: org.apache.spark.sql.DataFrame): Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    import graft.dsl.LazyFrame
+    Seq(
+      "join" -> (() => LazyFrame(fact).join(LazyFrame(dim), Seq("k")).df),
+      "joinOn" -> (() => LazyFrame(fact).joinOn(LazyFrame(dim.withColumnRenamed("k", "dk")),
+        col("k") === col("dk")).df),
+      "semiJoin" -> (() => LazyFrame(fact).semiJoin(LazyFrame(dim), Seq("k")).df),
+      "antiJoin" -> (() => LazyFrame(fact).antiJoin(LazyFrame(dim), Seq("k")).df))
+  }
 
   test("auto-broadcast: a >10MB-but-small parquet dim broadcasts with no manual hint") {
     import graft.dsl.LazyFrame
-    val dir = "/tmp/graft_test/bcast_dim"
-    // ~2M rows with two xxhash64 payload columns — incompressible, lands
-    // well above Spark's 10 MB default threshold on disk
-    spark.range(2000000).select(col("id").as("k"),
-        xxhash64(col("id")).as("p1"), xxhash64(col("id"), lit(7)).as("p2"))
-      .write.mode("overwrite").parquet(dir)
-    val dim = spark.read.parquet(dir)
-    val dimBytes = LazyFrame.estimatedBytes(dim)
-    assert(dimBytes > 10L * 1024 * 1024,
+    val dim = spark.read.parquet(bigDim)
+    val dimBytes = onDisk(dim)
+    assert(dimBytes > 10 * mb,
       s"fixture defect: dim is only $dimBytes bytes — must exceed Spark's 10 MB default")
-    assert(dimBytes < 256L * 1024 * 1024, s"fixture defect: dim too big ($dimBytes)")
-
-    val fact = spark.range(100000000L)
-      .select(pmod(col("id"), lit(2000000L)).as("k"), col("id").as("v"))
-    // control: the RAW Spark join at the default threshold is NOT broadcast
-    val raw = planOf(fact.join(dim, "k"))
+    assert(dimBytes < 256 * mb, s"fixture defect: dim too big ($dimBytes)")
+    // control: Spark's own 10 MB threshold, set explicitly, does NOT broadcast it
+    val raw = withSQLConf(threshold -> "10m")(planOf(fact.join(dim, "k")))
     assert(!raw.contains("BroadcastHashJoin"),
-      s"control broken: Spark broadcast a >10MB dim at the default threshold?\n$raw")
-    // This test pins the HINT MACHINERY, not the default cap (that has
-    // its own tests below), so pin the cap: since r17 the default is
-    // heap-derated and a small SPARK_DRIVER_MEM test JVM would otherwise
-    // put this dim over the session default and red the suite with no
-    // actual regression.
-    withSQLConf("spark.graft.broadcastThreshold" -> "256m") {
-      // library join: the size-driven hint must fire
-      val auto = planOf(LazyFrame(fact).join(LazyFrame(dim), Seq("k")).df)
-      assert(auto.contains("BroadcastHashJoin"),
-        s"auto-broadcast did not fire for a ${dimBytes / 1048576}MB dim:\n$auto")
-      // and for the left-outer / semi / anti build-right family too
-      assert(planOf(LazyFrame(fact).join(LazyFrame(dim), Seq("k"), "left").df)
-        .contains("BroadcastHashJoin"), "left join should broadcast-hint the dim")
-      assert(planOf(LazyFrame(fact).semiJoin(LazyFrame(dim), Seq("k")).df)
-        .contains("BroadcastHashJoin"), "semi join should broadcast-hint the dim")
+      s"control broken: Spark broadcast a >10MB dim at a 10 MB threshold?\n$raw")
+    // The rule at the 256 MB ceiling (pinned, not the heap-derated session
+    // cap, which has its own tests below) hints the dim on every join API:
+    // the four LazyFrame joins, a left join, a plain DataFrame join and SQL
+    val at256 = hintedAt(256 * mb) _
+    lazyJoins(dim).foreach { case (api, build) =>
+      assert(at256(build()) == Seq("right"), s"LazyFrame.$api should broadcast the dim")
     }
+    assert(at256(LazyFrame(fact).join(LazyFrame(dim), Seq("k"), "left").df) == Seq("right"))
+    assert(at256(fact.join(dim, "k")) == Seq("right"))
+    fact.createOrReplaceTempView("bcast_fact")
+    dim.createOrReplaceTempView("bcast_dim")
+    assert(at256(spark.sql("SELECT * FROM bcast_fact JOIN bcast_dim USING (k)")) == Seq("right"))
+    // right outer builds on the left: the dim on the left is the hinted side
+    assert(at256(dim.join(fact, Seq("k"), "right")) == Seq("left"))
   }
 
   test("auto-broadcast: cap=0 disables; full outer and similar-size sides never hint") {
     import graft.dsl.LazyFrame
-    val dim = spark.read.parquet("/tmp/graft_test/bcast_dim")
-    val fact = spark.range(100000000L)
-      .select(pmod(col("id"), lit(2000000L)).as("k"), col("id").as("v"))
-    withSQLConf("spark.graft.broadcastThreshold" -> "0") {
-      val p = planOf(LazyFrame(fact).join(LazyFrame(dim), Seq("k")).df)
-      assert(!p.contains("BroadcastHashJoin"), s"cap=0 must disable the hint:\n$p")
-    }
+    val dim = spark.read.parquet(bigDim)
+    assert(hintedAt(0)(LazyFrame(fact).join(LazyFrame(dim), Seq("k")).df) == Seq("none"),
+      "cap=0 must disable the hint")
     // full outer has no broadcastable build side — never hint
-    val fo = planOf(LazyFrame(fact).join(LazyFrame(dim), Seq("k"), "full").df)
-    assert(!fo.contains("BroadcastHashJoin"), s"full outer must not hint:\n$fo")
+    assert(hintedAt(256 * mb)(LazyFrame(fact).join(LazyFrame(dim), Seq("k"), "full").df) ==
+      Seq("none"), "full outer must not hint")
     // two similar-size sides: shipping one to every executor loses at
-    // cluster scale (the BroadcastRatio guard) — plan stays a shuffle join
-    val twin = spark.read.parquet("/tmp/graft_test/bcast_dim")
-    val sim = planOf(LazyFrame(dim).join(LazyFrame(twin.withColumnRenamed("p1", "q1")
-      .withColumnRenamed("p2", "q2")), Seq("k")).df)
-    assert(!sim.contains("BroadcastHashJoin"),
-      s"similar-size sides must not broadcast (ratio guard):\n$sim")
+    // cluster scale (the ratio guard) — plan stays a shuffle join
+    val twin = spark.read.parquet(bigDim)
+      .withColumnRenamed("p1", "q1").withColumnRenamed("p2", "q2")
+    assert(hintedAt(256 * mb)(LazyFrame(dim).join(LazyFrame(twin), Seq("k")).df) ==
+      Seq("none"), "similar-size sides must not broadcast (ratio guard)")
   }
 
-  test("auto-broadcast: cap parses bytes and k/m/g suffixes") {
-    import graft.dsl.LazyFrame
-    assert(LazyFrame.parseBytes("268435456") == 268435456L)
-    assert(LazyFrame.parseBytes("256m") == 256L * 1024 * 1024)
-    assert(LazyFrame.parseBytes("1g") == 1L << 30)
-    assert(LazyFrame.parseBytes("512K") == 512L * 1024)
-    assert(LazyFrame.parseBytes("0") == 0L)
-    withSQLConf("spark.graft.broadcastThreshold" -> "64m") {
-      assert(LazyFrame.broadcastCap(spark) == 64L * 1024 * 1024)
+  test("auto-broadcast: an explicit Spark threshold (-1 or 10m) turns the rule off for LazyFrame joins") {
+    val dim = spark.read.parquet(midDim)
+    val dimBytes = onDisk(dim)
+    assert(dimBytes > 10 * mb && dimBytes <= 16 * mb,
+      s"fixture defect: dim is $dimBytes bytes — must lie in (10 MB, 16 MB]")
+    lazyJoins(dim).foreach { case (api, build) =>
+      // no explicit threshold: the rule broadcasts the dim (cap >= 16 MB)
+      val auto = planOf(build())
+      assert(auto.contains("BroadcastHashJoin"), s"LazyFrame.$api did not broadcast:\n$auto")
+      val off = withSQLConf(threshold -> "-1")(planOf(build()))
+      assert(!off.contains("BroadcastHashJoin"),
+        s"LazyFrame.$api broadcast under an explicit -1:\n$off")
     }
+    // 10m: Spark's own threshold decides. semiJoin and antiJoin read only the
+    // key, which Catalyst sizes at half the dim, under 10 MB — Spark itself
+    // broadcasts those, so only the two joins that keep every column count
+    lazyJoins(dim).take(2).foreach { case (api, build) =>
+      val off = withSQLConf(threshold -> "10m")(planOf(build()))
+      assert(!off.contains("BroadcastHashJoin"),
+        s"LazyFrame.$api broadcast a >10MB dim under an explicit 10m:\n$off")
+    }
+  }
+
+  test("auto-broadcast: plain DataFrame and SQL joins get the same rule") {
+    val dim = spark.read.parquet(midDim)
+    dim.createOrReplaceTempView("bcast_dim_mid")
+    fact.createOrReplaceTempView("bcast_fact")
+    val builds = Seq[() => org.apache.spark.sql.DataFrame](
+      () => fact.join(dim, "k"),
+      () => spark.sql("SELECT * FROM bcast_fact JOIN bcast_dim_mid USING (k)"),
+      () => spark.sql("SELECT * FROM bcast_fact LEFT JOIN bcast_dim_mid USING (k)"))
+    builds.foreach { build =>
+      val auto = planOf(build())
+      assert(auto.contains("BroadcastHashJoin"), s"the rule did not broadcast the dim:\n$auto")
+      val off = withSQLConf(threshold -> "10m")(planOf(build()))
+      assert(!off.contains("BroadcastHashJoin"), s"broadcast under an explicit 10m:\n$off")
+    }
+    // full outer never broadcasts
+    val fo = planOf(spark.sql("SELECT * FROM bcast_fact FULL JOIN bcast_dim_mid USING (k)"))
+    assert(!fo.contains("BroadcastHashJoin"), s"full outer must not broadcast:\n$fo")
+  }
+
+  test("auto-broadcast: streaming sides and already-hinted joins are left unchanged") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, SHUFFLE_MERGE}
+    val dim = spark.read.parquet(midDim)
+    // stream-static: the micro-batch planner sizes the stream, not this rule
+    val stream = spark.readStream.format("rate").load()
+      .select(pmod(col("value"), lit(650000L)).as("k"))
+    val streamed = graft.plans.BroadcastBySize(
+      stream.join(dim, "k").queryExecution.analyzed, 256 * mb)
+    assert(streamed.collect { case j: Join => j.hint } == Seq(JoinHint.NONE))
+    // a user's hint stands: the rule adds no broadcast to a merge-hinted join
+    val hinted = fact.join(dim.hint("merge"), "k")
+    val hints = graft.plans.BroadcastBySize(hinted.queryExecution.optimizedPlan, 256 * mb)
+      .collect { case j: Join => j.hint }
+    assert(hints.map(h => (h.leftHint, h.rightHint.flatMap(_.strategy))) ==
+      Seq((None, Some(SHUFFLE_MERGE))), hints)
+    val p = planOf(fact.join(dim.hint("merge"), "k"))
+    assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p)
   }
 
   // ---- heap-derated default cap (r17, VERDICT r16 "what's wrong" #2) -------
@@ -554,42 +633,44 @@ class PlanSpec extends SparkSpec {
   // driver, so the default is maxHeap/30 clamped to [16 MB, 256 MB].
 
   test("auto-broadcast: default cap derates against driver heap") {
-    import graft.dsl.LazyFrame
-    val mb = 1L << 20
+    import graft.plans.BroadcastBySize
+    import BroadcastBySize.derateCap
     // 1 GB cluster-default driver: ~34 MB — 10× inflation of a 34 MB scan
     // is ~340 MB, a third of the heap, survivable
-    assert(LazyFrame.derateCap(1L << 30) == (1L << 30) / 30)
-    assert(LazyFrame.derateCap(1L << 30) < 64 * mb)
+    assert(derateCap(1L << 30) == (1L << 30) / 30)
+    assert(derateCap(1L << 30) < 64 * mb)
     // tiny driver: floor at 16 MB so the measured 10 MB star-join cliff
     // stays closed
-    assert(LazyFrame.derateCap(256 * mb) == 16 * mb)
+    assert(derateCap(256 * mb) == 16 * mb)
     // big rig (bench JVM runs at 8 GiB): full 256 MB ceiling
-    assert(LazyFrame.derateCap(8L << 30) == 256 * mb)
-    assert(LazyFrame.derateCap(96L << 30) == 256 * mb)
-    // with no conf pin the session cap IS the derated value for this
-    // JVM's real heap (the default path, not a fixed constant)
-    assert(spark.conf.getOption("spark.graft.broadcastThreshold").isEmpty)
-    assert(LazyFrame.broadcastCap(spark) ==
-      LazyFrame.derateCap(Runtime.getRuntime.maxMemory))
+    assert(derateCap(8L << 30) == 256 * mb)
+    assert(derateCap(96L << 30) == 256 * mb)
+    // with no explicit threshold the session rule IS the rule at the
+    // derated cap for this JVM's real heap (the default path, not a fixed
+    // constant); with one, it returns the plan untouched
+    val dims = Seq(midDim, bigDim).map(spark.read.parquet)
+    dims.foreach { dim =>
+      val optimized = withSQLConf(threshold -> "-1")(
+        fact.join(dim, "k").queryExecution.optimizedPlan)
+      assert(!spark.conf.getAll.contains(threshold))
+      assert(BroadcastBySize(optimized) ==
+        BroadcastBySize(optimized, derateCap(Runtime.getRuntime.maxMemory)))
+      withSQLConf(threshold -> "10m")(assert(BroadcastBySize(optimized) eq optimized))
+    }
   }
 
   test("auto-broadcast: hint does NOT fire when the in-memory estimate exceeds the derated cap") {
-    import graft.dsl.LazyFrame
-    // the ~20-50 MB on-disk dim from the fixture above inflates to
-    // ~200-500 MB in driver memory — over a 1 GB driver's derated ~34 MB
-    // cap. Pin that cap via conf (the JVM heap itself can't change
-    // in-test) and require the plan to stay a shuffle join.
-    val dim = spark.read.parquet("/tmp/graft_test/bcast_dim")
-    val onDisk = LazyFrame.estimatedBytes(dim)
-    val oneGbCap = LazyFrame.derateCap(1L << 30)
-    assert(onDisk > oneGbCap,
-      s"fixture defect: dim ($onDisk B) should exceed a 1 GB driver's derated cap ($oneGbCap B)")
-    val fact = spark.range(100000000L)
-      .select(pmod(col("id"), lit(2000000L)).as("k"), col("id").as("v"))
-    withSQLConf("spark.graft.broadcastThreshold" -> oneGbCap.toString) {
-      val p = planOf(LazyFrame(fact).join(LazyFrame(dim), Seq("k")).df)
-      assert(!p.contains("BroadcastHashJoin"),
-        s"a dim over the 1 GB-driver derated cap must NOT be hinted:\n$p")
-    }
+    import graft.plans.BroadcastBySize.derateCap
+    // the ~20-50 MB on-disk dim inflates to ~200-500 MB in driver memory —
+    // over a 1 GB driver's derated ~34 MB cap. The JVM heap itself can't
+    // change in-test, so apply the rule at that cap: the join stays a
+    // shuffle join; at the 256 MB ceiling the same join is hinted.
+    val dim = spark.read.parquet(bigDim)
+    val oneGbCap = derateCap(1L << 30)
+    assert(onDisk(dim) > oneGbCap,
+      s"fixture defect: dim (${onDisk(dim)} B) should exceed a 1 GB driver's derated cap ($oneGbCap B)")
+    assert(hintedAt(oneGbCap)(fact.join(dim, "k")) == Seq("none"),
+      "a dim over the 1 GB-driver derated cap must NOT be hinted")
+    assert(hintedAt(256 * mb)(fact.join(dim, "k")) == Seq("right"))
   }
 }

@@ -51,7 +51,7 @@ class SessionSpec extends AnyFunSuite {
   test("no new session confs or environment variables are read") {
     val graftConf = "\"(spark\\.graft\\.[\\w.]*\\w)".r
     val envRead = "(?:sys\\.env\\.?\\w*|System\\.getenv)\\(\\s*\"([^\"]+)\"".r
-    assert(mainSourceCaptures(graftConf) == Set("spark.graft.broadcastThreshold"))
+    assert(mainSourceCaptures(graftConf) == Set.empty[String])
     assert(mainSourceCaptures(envRead) == Set("SPARK_GRAFT_CPUS",
       "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
       "SPARK_GRAFT_BENCH_WARM", "SPARK_GRAFT_SHUFFLE_CODEC"))
@@ -74,7 +74,7 @@ class SessionSpec extends AnyFunSuite {
 
   // the builder calls of Bench and Verify as they stood before the factory,
   // plus the one pair the factory has added since: graft's extensions (its
-  // SQL functions and its planner rule) in every main
+  // SQL functions and its planner rules) in every main
   private val extensions = "spark.sql.extensions" -> "graft.GraftExtensions"
 
   private def benchBefore(cpus: Int) = Seq(

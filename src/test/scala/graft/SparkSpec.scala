@@ -51,10 +51,13 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** Run `body` with the given SQL confs set, restoring prior values after. */
+  /** Run `body` with the given SQL confs set, restoring prior values after.
+    * A conf that was unset is unset again, not set to its default:
+    * `graft.plans.BroadcastBySize` turns off when Spark's threshold is set
+    * at all. */
   def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
     val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    val saved = pairs.map { case (k, _) => k -> conf.getAll.get(k) }
     pairs.foreach { case (k, v) => conf.set(k, v) }
     try body
     finally saved.foreach {

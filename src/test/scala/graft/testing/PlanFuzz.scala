@@ -602,7 +602,7 @@ object PlanFuzz {
         // the suffix ONLY when it collides with a left column (after a
         // set-op source the left is the narrow projection, so most right
         // columns keep their plain names). Exercises the library's
-        // collision-rename + automatic broadcast path end-to-end.
+        // collision-rename path end-to-end.
         val leftNames = schema.map(_.name).toSet
         val rNonKey = baseSchema.filterNot(c => keys.contains(c.name))
         def outName(c: Col) = if (leftNames(c.name)) c.name + "_r" else c.name
