@@ -120,9 +120,11 @@ final class LazyFrame(val df: DataFrame) {
   /** polars join: key columns coalesce (Spark using-join), and right-side
     * NON-key columns whose names collide with the left get the polars
     * `suffix` (default "_right") instead of becoming ambiguous.
-    * Which side broadcasts is the engine's decision
-    * ([[graft.plans.BroadcastBySize]]), made once per query when it is
-    * optimized, the same for every join API. */
+    * Like polars, no join method here takes a physical-plan argument:
+    * which side broadcasts is decided by [[graft.plans.BroadcastBySize]]
+    * (with Spark's own threshold) once per query when it is optimized, and
+    * a hot key is split at run time by AQE's skew join (AQE is on in every
+    * [[graft.GraftSession]]). */
   def join(other: LazyFrame, on: Seq[String], how: String = "inner",
            suffix: String = "_right"): LazyFrame = {
     val leftCols = df.columns.toSet
@@ -137,11 +139,6 @@ final class LazyFrame(val df: DataFrame) {
   def joinOn(other: LazyFrame, cond: Column, how: String = "inner"): LazyFrame =
     LazyFrame(df.join(other.df, cond, how))
 
-  /** Broadcast the (small) right side — polars has no cluster notion; at
-    * 100 TB this is the difference between a map-side join and a shuffle. */
-  def joinBroadcast(other: LazyFrame, on: Seq[String], how: String = "inner"): LazyFrame =
-    LazyFrame(df.join(broadcast(other.df), on, how))
-
   def crossJoin(other: LazyFrame): LazyFrame = LazyFrame(df.crossJoin(other.df))
 
   def semiJoin(other: LazyFrame, on: Seq[String]): LazyFrame =
@@ -149,39 +146,6 @@ final class LazyFrame(val df: DataFrame) {
 
   def antiJoin(other: LazyFrame, on: Seq[String]): LazyFrame =
     LazyFrame(df.join(other.df, on, "left_anti"))
-
-  /** polars join_where (arbitrary inequality predicates,
-    * crates/polars-plan/src/dsl/plan.rs:85). Catalyst extracts any equi-parts;
-    * pure-inequality falls to BNLJ — keep the build side small/broadcast. */
-  /** Skew-salted equi-join: append a deterministic salt in [0, salt) to
-    * this (large, skewed) side's key and replicate the other (smaller)
-    * side once per salt value — a hot key's rows land on `salt` reducers
-    * instead of one. Use when one key holds a double-digit percentage of
-    * rows and AQE's skew split isn't enough; costs salt× replication of
-    * the right side. Result equals the plain join (spec-checked).
-    *
-    * Only left-preserving joins are allowed: the right side is replicated
-    * once per salt value, so right/full outer would emit every unmatched
-    * right row `salt` times. */
-  def joinSalted(other: LazyFrame, on: Seq[String], salt: Int,
-                 how: String = "inner"): LazyFrame = {
-    require(salt > 1, s"salt must be > 1, got $salt")
-    val normalized = how.toLowerCase.replace("_", "").replace("-", "")
-    require(Set("inner", "left", "leftouter", "leftsemi", "semi", "leftanti", "anti")(normalized),
-      s"joinSalted supports inner/left/semi/anti only (right side is replicated " +
-        s"per salt — right/full outer would duplicate unmatched right rows); got '$how'")
-    // collision-free salt column even if the input already has a __salt column
-    var saltCol = "__salt"
-    while (df.columns.contains(saltCol) || other.df.columns.contains(saltCol))
-      saltCol = saltCol + "_"
-    // deterministic per-row salt: hash of the full row, not rand() — keeps
-    // retries/speculative tasks consistent
-    val l = df.withColumn(saltCol,
-      pmod(xxhash64(struct(df.columns.map(col): _*)), lit(salt)).cast("int"))
-    val r = other.df.withColumn(saltCol,
-      explode(sequence(lit(0), lit(salt - 1))))
-    LazyFrame(l.join(r, on :+ saltCol, how).drop(saltCol))
-  }
 
   /** polars JoinArgs.validate ("1:1" | "1:m" | "m:1" | "m:m"): assert key
     * cardinality before joining. The check is one distributed agg per
@@ -258,9 +222,8 @@ final class LazyFrame(val df: DataFrame) {
     LazyFrame(graft.ops.IEJoin.join(df, other.df, lx, op, rx, residual))
 
   /** polars join_asof — see [[graft.ops.AsOf]] for the union+window
-    * implementation. `rangedBy = true` switches the by-keyed match to the
-    * skew-proof range-partitioned carry (see [[graft.ops.AsOf.join]]) — use
-    * it when one by-group dominates the frame.
+    * implementation and its one documented scale limit (a dominant `by`
+    * group runs its window on one task).
     *
     * SEMANTIC DIFFERENCE vs polars (documented in README): when several
     * right rows tie on `(by, rightOn)`, polars keeps the row appearing
@@ -272,10 +235,9 @@ final class LazyFrame(val df: DataFrame) {
     * polars pick. */
   def joinAsof(other: LazyFrame, leftOn: String, rightOn: String,
                by: Seq[String] = Nil, strategy: String = "backward",
-               tolerance: Option[Column] = None,
-               rangedBy: Boolean = false): LazyFrame =
+               tolerance: Option[Column] = None): LazyFrame =
     LazyFrame(graft.ops.AsOf.join(df, other.df, leftOn, rightOn, by, strategy,
-      tolerance, rangedBy))
+      tolerance))
 
   // ---- distinct -----------------------------------------------------------
 

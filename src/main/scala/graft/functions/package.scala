@@ -430,25 +430,20 @@ package object functions {
   // ---- lists / vectors ------------------------------------------------------
 
   /** Sum of element-wise products — the hot loop of similarity search.
-    * Native fused kernel ([[DotProductExpr]]); bit-identical to
-    * [[dotProductHof]], which documents the exact semantics. */
+    * Native fused kernel ([[DotProductExpr]]); bit-identical to the
+    * higher-order-function formulation `graft.Reference.dotProductHof`
+    * (test scope), which documents the exact semantics. */
   def dotProduct(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(DotProductExpr(Bridge.expression(a), Bridge.expression(b)))
   }
 
-  /** Reference HOF formulation of [[dotProduct]] (interpreted lambdas) —
-    * kept for the equivalence spec and for non-float/double element types. */
-  def dotProductHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
 
   /** Cosine similarity in ONE fused native loop (dot + both norms) instead
-    * of three HOF passes; bit-identical to `dotProductHof(a, b) /
-    * (l2Norm(a) * l2Norm(b))`. */
+    * of three HOF passes; bit-identical to `graft.Reference`'s
+    * `cosineSimilarityHof`, `dotProductHof(a, b) / (l2Norm(a) * l2Norm(b))`. */
   def cosineSimilarity(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(CosineSimilarityExpr(Bridge.expression(a), Bridge.expression(b)))

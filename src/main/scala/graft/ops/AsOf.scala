@@ -15,24 +15,18 @@ import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, Timesta
   *
   * Scale properties: ONE shuffle on the `by` keys (or a single range
   * repartition when `by` is empty), no O(n·m) probing, no broadcast
-  * requirement — both sides can be 100 TB. Skewed `by` keys: the default
-  * keyed window puts each by-group on one task; pass `rangedBy = true` for
-  * the range-partitioned boundary-carry variant (r7), which spreads a
-  * dominant group over many partitions at the cost of one extra carry join.
+  * requirement — both sides can be 100 TB. There is one matcher per shape:
+  * a keyed window partitioned on `by`, or, with no `by`, the keyless
+  * range-partitioned boundary carry. Limit: the keyed window runs each
+  * by-group on one task, so a dominant `by` group (one instrument with half
+  * the ticks) is as slow as its own sort, however many cores there are.
   */
 object AsOf {
 
-  /** `rangedBy = true` replaces the per-`by`-group window with a range
-    * partitioning on (by, key) plus a per-group boundary carry — the skew
-    * answer when ONE by-group dominates (a single instrument with half the
-    * ticks would otherwise pin its whole group on one task). Costs one
-    * extra metadata-side shuffle for the carry join; identical results
-    * (property-spec'd), so keep the default for well-distributed keys. */
   def join(left: DataFrame, right: DataFrame, leftOn: String, rightOn: String,
-           by: Seq[String], strategy: String, tolerance: Option[Column],
-           rangedBy: Boolean = false): DataFrame =
+           by: Seq[String], strategy: String, tolerance: Option[Column]): DataFrame =
     dispatch(prepUnion(left, right, leftOn, rightOn, by),
-      leftOn, rightOn, by, strategy, tolerance, rangedBy)
+      leftOn, rightOn, by, strategy, tolerance)
 
   /** As-of join where BOTH sides are row-slices of ONE frame, discriminated
     * by two disjoint predicates — the "events split into streams" pattern
@@ -64,19 +58,17 @@ object AsOf {
                  leftWhen: Column, leftCols: Seq[(String, Column)],
                  rightWhen: Column, rightCols: Seq[(String, Column)],
                  leftOn: String, rightOn: String, by: Seq[String],
-                 strategy: String, tolerance: Option[Column],
-                 rangedBy: Boolean = false): DataFrame =
+                 strategy: String, tolerance: Option[Column]): DataFrame =
     dispatch(prepUnionSliced(src, leftWhen, leftCols, rightWhen, rightCols,
-      leftOn, rightOn, by), leftOn, rightOn, by, strategy, tolerance, rangedBy)
+      leftOn, rightOn, by), leftOn, rightOn, by, strategy, tolerance)
 
   private def dispatch(prepared: (DataFrame, Seq[String], Seq[String]),
                        leftOn: String, rightOn: String, by: Seq[String],
-                       strategy: String, tolerance: Option[Column],
-                       rangedBy: Boolean): DataFrame =
+                       strategy: String, tolerance: Option[Column]): DataFrame =
     strategy match {
-      case "backward" => directional(prepared, leftOn, rightOn, by, tolerance, forward = false, rangedBy)
-      case "forward"  => directional(prepared, leftOn, rightOn, by, tolerance, forward = true, rangedBy)
-      case "nearest"  => nearest(prepared, leftOn, rightOn, by, tolerance, rangedBy)
+      case "backward" => directional(prepared, leftOn, rightOn, by, tolerance, forward = false)
+      case "forward"  => directional(prepared, leftOn, rightOn, by, tolerance, forward = true)
+      case "nearest"  => nearest(prepared, leftOn, rightOn, by, tolerance)
       case other      => throw new IllegalArgumentException(s"unknown asof strategy: $other")
     }
 
@@ -173,7 +165,7 @@ object AsOf {
     * ordering picked whichever tied row a partition delivered last — two
     * runs of the same plan could carry different values (the r13
     * PlanSerdeSpec flake). The tie direction FOLLOWS the key direction so
-    * the window's pick and the boundary-carry paths' min_by/max_by-over-
+    * the window's pick and the keyless boundary carry's min_by/max_by-over-
     * struct pick are the same row.
     *
     * Caveat (documented limit, not a defect): the tie-break spans only
@@ -185,8 +177,7 @@ object AsOf {
     * fixtures, and anything polars itself can sort) are fully
     * deterministic. */
   private def matchOnce(unioned: DataFrame, by: Seq[String], rightCols: Seq[String],
-                        forward: Boolean, rangedBy: Boolean,
-                        suffix: String = ""): DataFrame = {
+                        forward: Boolean, suffix: String = ""): DataFrame = {
     // backward: right rows at the same key match (right sorts before left via
     // tag); forward: mirror by negating the sort.
     val tieCols = rightCols.filter { c =>
@@ -198,8 +189,7 @@ object AsOf {
        else Seq(col("__k").asc, col("__tag").asc)) ++
       tieCols.map(c => if (forward) col(s"__r_$c").desc else col(s"__r_$c").asc)
     val m =
-      if (by.nonEmpty && rangedBy) rangedByMatched(unioned, by, rightCols, tieCols, ord, forward)
-      else if (by.nonEmpty) {
+      if (by.nonEmpty) {
         val w = Window.partitionBy(by.map(col): _*)
           .orderBy(ord: _*)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -233,9 +223,9 @@ object AsOf {
   private def directional(prepared: (DataFrame, Seq[String], Seq[String]),
                           leftOn: String, rightOn: String, by: Seq[String],
                           tolerance: Option[Column],
-                          forward: Boolean, rangedBy: Boolean): DataFrame = {
+                          forward: Boolean): DataFrame = {
     val (unioned, leftCols, rightCols) = prepared
-    val matched = matchOnce(unioned, by, rightCols, forward, rangedBy)
+    val matched = matchOnce(unioned, by, rightCols, forward)
 
     val withinTol = tolerance match {
       case None => lit(true)
@@ -285,10 +275,9 @@ object AsOf {
     // (or the carry-in when the suffix is empty) equals the global tie-break
     // winner regardless of where the sampled boundaries landed.
     //
-    // localCheckpoint PINS the partition ids (same reasoning as
-    // rangedByMatched below): this plan reads `ranged` from two branches
-    // (the per-pid carry aggregate and the local window, joined back on
-    // __pid), and RangePartitioner samples its bounds with an
+    // localCheckpoint PINS the partition ids: this plan reads `ranged` from
+    // two branches (the per-pid carry aggregate and the local window, joined
+    // back on __pid), and RangePartitioner samples its bounds with an
     // rdd.id-derived seed — two independent evaluations of the range
     // exchange can draw DIFFERENT boundaries, giving the branches
     // inconsistent pids and wrong boundary carry-ins. Exchange reuse
@@ -347,87 +336,20 @@ object AsOf {
     ) { (d, c) => d.withColumn(s"__m_$c", coalesce(col(s"__m_$c"), col(s"__in_$c"))) }
   }
 
-  /** Skew-proof BY-KEYED matching: the keyless boundary-carry machinery
-    * generalized to by-groups. Range-repartition on (by…, key) — contiguous
-    * (by, key) spans, so a dominant by-group spreads over MANY partitions
-    * instead of pinning one window task — run the carry window per
-    * (partition, by-group), then fix up group segments that cross partition
-    * boundaries: per-(partition, by) last values (an aggregate, data-scale ÷
-    * group sizes), a per-by running carry over partition ids (each by-group's
-    * carry window is its partition-span — bounded by #partitions), and a
-    * null-safe join back on (partition, by…). AQE broadcasts the carry frame
-    * when small; with millions of by-groups it shuffles — still skew-free. */
-  private def rangedByMatched(unioned: DataFrame, by: Seq[String],
-                              rightCols: Seq[String], tieCols: Seq[String],
-                              ord: Seq[Column], forward: Boolean): DataFrame = {
-    // by-prefix + the FULL window order (key, tag, ties) — see
-    // keylessMatched: tied runs split only at tie boundaries, so the local
-    // pick / carry-in composition is boundary-placement-independent
-    val rangeOrd = by.map(col) ++ ord
-    // localCheckpoint PINS the partition ids: RangePartitioner samples its
-    // bounds with an rdd.id-derived seed, so two independent evaluations of
-    // the same range exchange can draw DIFFERENT boundaries — and this plan
-    // reads `ranged` from two branches (carry window + local window) joined
-    // back together. Exchange reuse would dedupe them when AQE feels like
-    // it; materializing once makes the shared pids unconditional. The cost
-    // (one materialization of the union) is the price of the skew-proof
-    // path — it's opt-in via rangedBy for exactly that reason. LAZY so
-    // building the plan runs no job; the pin engages on the first action.
-    val ranged = unioned.repartitionByRange(rangeOrd: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = false)
-
-    val w = Window.partitionBy((col("__pid") +: by.map(col)): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = rightCols.foldLeft(
-      ranged.withColumn("__mk", last(col("__rk"), ignoreNulls = true).over(w))
-    ) { (d, c) => d.withColumn(s"__m_$c", last(col(s"__r_$c"), ignoreNulls = true).over(w)) }
-
-    val tieStruct = struct((col("__k") +: tieCols.map(c => col(s"__r_$c"))): _*)
-    def lastIn(value: Column, isRight: Column): Column = {
-      val o = when(isRight && value.isNotNull, tieStruct)
-      if (forward) min_by(value, o) else max_by(value, o)
-    }
-    val isR = col("__tag") === 0
-    val carryCols = "__key__" +: rightCols
-    val perSeg = ranged.groupBy((col("__pid") +: by.map(col)): _*).agg(
-      lastIn(col("__rk"), isR).as("__c___key__"),
-      rightCols.map(c => lastIn(col(s"__r_$c"), isR).as(s"__c_$c")): _*)
-    // strictly-earlier partitions of the SAME by-group carry in
-    val wc = Window.partitionBy(by.map(col): _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perSeg.select(
-      (col("__pid").as("__cpid") +: by.map(b => col(b).as(s"__cby_$b"))) ++
-        carryCols.map(c =>
-          last(col(s"__c_$c"), ignoreNulls = true).over(wc).as(s"__in_$c")): _*)
-
-    // null-safe on the by columns: a null by-group spanning partitions
-    // needs its carry too
-    val cond = (local("__pid") === carry("__cpid")) &&
-      by.map(b => local(b) <=> carry(s"__cby_$b")).reduce(_ && _)
-    val joined = local.join(carry, cond, "left")
-      .drop(("__cpid" +: by.map(b => s"__cby_$b")): _*)
-    rightCols.foldLeft(
-      joined.withColumn("__mk", coalesce(col("__mk"), col("__in___key__")))
-    ) { (d, c) => d.withColumn(s"__m_$c", coalesce(col(s"__m_$c"), col(s"__in_$c"))) }
-  }
-
   private def nearest(prepared: (DataFrame, Seq[String], Seq[String]),
                       leftOn: String, rightOn: String, by: Seq[String],
-                      tolerance: Option[Column],
-                      rangedBy: Boolean): DataFrame = {
+                      tolerance: Option[Column]): DataFrame = {
     // Both directions over ONE union, as two chained match passes — never a
     // self-join on a synthetic row id. (The previous formulation ran two
     // directional joins and aligned them on monotonically_increasing_id;
     // that id is re-evaluated per join branch and is only stable when the
     // upstream partitioning is reproducible, so e.g. a round-robin
-    // repartition upstream could silently misalign the two passes — caught
-    // by the rangedBy equivalence spec. Tie → backward, matching polars'
-    // preference for the earlier row.)
+    // repartition upstream could silently misalign the two passes. Tie →
+    // backward, matching polars' preference for the earlier row.)
     val (unioned, leftCols, rightCols) = prepared
     val both = matchOnce(
-      matchOnce(unioned, by, rightCols, forward = false, rangedBy, "__b"),
-      by, rightCols, forward = true, rangedBy, "__f")
+      matchOnce(unioned, by, rightCols, forward = false, "__b"),
+      by, rightCols, forward = true, "__f")
     val out = both.filter(col("__tag") === 1)
 
     val kDt = out.schema("__k").dataType

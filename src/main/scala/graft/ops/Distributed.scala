@@ -106,7 +106,7 @@ object Distributed {
     * (reservoir subsampling active) two independent evaluations can draw
     * DIFFERENT boundaries and assign rows to different `__dp` partitions —
     * silently corrupting row numbers / prefix sums. `localCheckpoint`
-    * pins the partitioning once (same fix as AsOf.rangedByMatched); it
+    * pins the partitioning once (as in AsOf's keyless matcher); it
     * also replaces the old double-evaluation of the input lineage with a
     * single materialized pass. */
   private def withScanned(df: DataFrame, ord: Seq[Column], total: Column,

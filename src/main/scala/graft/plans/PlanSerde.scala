@@ -50,13 +50,11 @@ object PlanSerde {
 
   /** polars join_asof → [[graft.ops.AsOf.join]]. `tolerance` is a SQL
     * expression string in the key's natural comparison units (epoch
-    * seconds for timestamp keys — the AsOf contract, e.g. "7200.0");
-    * `rangedBy` selects the skew-proof range-partitioned carry. */
+    * seconds for timestamp keys — the AsOf contract, e.g. "7200.0"). */
   case class AsOfJoin(left: Node, right: Node, leftOn: String,
                       rightOn: String, by: Seq[String] = Nil,
                       strategy: String = "backward",
-                      tolerance: Option[String] = None,
-                      rangedBy: Boolean = false) extends Node
+                      tolerance: Option[String] = None) extends Node
   /** Inequality-led join → grid-partitioned [[graft.ops.IEJoin.join]].
     * `op` ∈ <, <=, >, >=; `residual` is an extra predicate conjunct. */
   case class IneqJoin(left: Node, right: Node, leftExpr: String, op: String,
@@ -122,9 +120,9 @@ object PlanSerde {
     case Limit(c, n) =>
       require(n >= 0, s"Limit needs n >= 0, got $n")
       build(spark, c).limit(n)
-    case AsOfJoin(l, r, lOn, rOn, by, strategy, tol, ranged) =>
+    case AsOfJoin(l, r, lOn, rOn, by, strategy, tol) =>
       graft.ops.AsOf.join(build(spark, l), build(spark, r), lOn, rOn, by,
-        strategy, tol.map(expr), ranged)
+        strategy, tol.map(expr))
     case IneqJoin(l, r, lx, op, rx, residual) =>
       graft.ops.IEJoin.join(build(spark, l), build(spark, r), expr(lx), op,
         expr(rx), residual.map(expr).getOrElse(org.apache.spark.sql.functions.lit(true)))

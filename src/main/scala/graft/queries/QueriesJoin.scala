@@ -106,12 +106,13 @@ object QueriesJoin {
         .sort(col("o_custkey")).collect()
     }),
 
-    // star join with broadcast dims: revenue per region (plan should show
-    // BroadcastHashJoin for nation/region and one shuffle for the agg).
+    // star join: revenue per region. BroadcastBySize hints the 25-row
+    // nation and 5-row region dims (plan shows BroadcastHashJoin for both
+    // and one shuffle for the agg).
     "join_star" -> ((s, d) =>
       lf(s, d, "customer")
-        .joinBroadcast(lf(s, d, "nation").rename("n_nationkey" -> "c_nationkey"), Seq("c_nationkey"))
-        .joinBroadcast(lf(s, d, "region").rename("r_regionkey" -> "n_regionkey"), Seq("n_regionkey"))
+        .join(lf(s, d, "nation").rename("n_nationkey" -> "c_nationkey"), Seq("c_nationkey"))
+        .join(lf(s, d, "region").rename("r_regionkey" -> "n_regionkey"), Seq("n_regionkey"))
         .groupBy(col("r_name"))
         .agg(count(lit(1)).as("n_cust"), round(sum(col("c_acctbal")), 2).as("sum_bal"))
         .sort(col("r_name")).collect()),

@@ -132,45 +132,6 @@ class AsOfSpec extends SparkSpec {
     }
   }
 
-  test("rangedBy (skew-proof by-keyed path) equals the keyed-window path") {
-    // AQE would coalesce these small range exchanges to one partition and
-    // make the boundary-carry vacuous — pin it off, like DistributedPropertySpec
-    val saved = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      for (seed <- 0 until 4) {
-        val rnd = new scala.util.Random(seed ^ 0xa50f)
-        // skewed by-keys: ~70% of rows in group "hot", plus a NULL group
-        def grp(): java.lang.Long = rnd.nextInt(10) match {
-          case n if n < 7 => 1L
-          case 7          => null
-          case n          => n.toLong
-        }
-        val ldata = (0 until 800).map(_ => (grp(), rnd.nextInt(1000).toLong, rnd.nextInt(100)))
-        // UNIQUE right key per group here: this test compares the ranged
-        // and unranged PATHS, so it isolates path equivalence from the
-        // duplicate-key tie-break (which has its own deterministic value
-        // order since r14 — see the dedicated tie-break test below)
-        val rdata = rnd.shuffle((0 until 1000).toList).take(300)
-          .map(k => (grp(), k.toLong, rnd.nextInt(100)))
-        val l = ldata.toDF("g", "k", "lv").repartition(5)
-        val r = rdata.toDF("g", "rk", "rv").repartition(5)
-        for (strategy <- Seq("backward", "forward", "nearest")) {
-          def run(ranged: Boolean) =
-            AsOf.join(l, r, "k", "rk", Seq("g"), strategy, None, rangedBy = ranged)
-              .select("g", "k", "lv", "rk", "rv").collect()
-              .map(row => (0 until 5).map(i =>
-                if (row.isNullAt(i)) null else row.get(i)).toList)
-              .groupBy(identity).view.mapValues(_.size).toMap
-          assert(run(true) == run(false), s"seed=$seed strategy=$strategy")
-        }
-      }
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", v)
-      case None    => spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    }
-  }
-
   test("joinSliced (one-scan tagged union) equals join over filtered frames") {
     for (seed <- 0 until 4) {
       val rnd = new scala.util.Random(seed ^ 0x51ce)
@@ -253,10 +214,10 @@ class AsOfSpec extends SparkSpec {
     }
   }
 
-  test("tie-break contract holds on the rangedBy and keyless paths too") {
-    // r15 (r14 advice): the boundary-carry paths implement the same
+  test("tie-break contract holds on the keyless path too") {
+    // r15 (r14 advice): the keyless boundary carry implements the same
     // contract through min_by/max_by-over-struct — a separate mechanism
-    // from the keyed window's ordered last() — so they need their own
+    // from the keyed window's ordered last() — so it needs its own
     // duplicate-right-key pins, across the same partition-count sweep.
     val dupR = Seq(
       ("a", 4L, "rA"), ("a", 4L, "rC"), ("a", 4L, "rB"),
@@ -264,15 +225,6 @@ class AsOfSpec extends SparkSpec {
     ).toDF("g", "rk", "rv")
     for (parts <- Seq(1, 3, 7); pass <- 0 until 3) {
       val r = dupR.repartition(parts)
-      // rangedBy (skew-proof by-keyed boundary carry)
-      val backR = AsOf.join(left, r, "k", "rk", Seq("g"), "backward", None,
-          rangedBy = true)
-        .filter(col("k") === 5L).select("rv").as[String].head()
-      assert(backR == "rC", s"rangedBy backward parts=$parts pass=$pass")
-      val fwdR = AsOf.join(left, r, "k", "rk", Seq("g"), "forward", None,
-          rangedBy = true)
-        .filter(col("k") === 1L).select("rv").as[String].head()
-      assert(fwdR == "rA", s"rangedBy forward parts=$parts pass=$pass")
       // keyless (by = Nil; right's g renamed — it becomes a payload column,
       // and being constant it defers the tie to rv, same expected picks)
       val rK = r.withColumnRenamed("g", "rg")

@@ -150,8 +150,8 @@ class DistributedPropertySpec extends SparkSpec {
   }
 
   test("scan branches stay bounds-consistent on unioned round-robin input (stress)") {
-    // withScanned pins its ranged frame with localCheckpoint (same fix as
-    // AsOf.rangedByMatched — RangePartitioner's rdd.id-derived seed means
+    // withScanned pins its ranged frame with localCheckpoint (as AsOf's
+    // keyless matcher does — RangePartitioner's rdd.id-derived seed means
     // two independent evaluations of one range exchange can draw different
     // bounds). This stress keeps driving the most adversarial deterministic
     // shape we know — a union of two round-robin-repartitioned frames with

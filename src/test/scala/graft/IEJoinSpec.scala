@@ -45,7 +45,7 @@ class IEJoinSpec extends SparkSpec {
     val b = spark.sql(
       """SELECT * FROM VALUES (10L, 2.0), (11L, cast(null as double)), (12L, 0.5)
         |AS t(b_key, b_x)""".stripMargin)
-    val got = IEJoin.join(a, b, col("a_x"), "<", col("b_x"), buckets = 2)
+    val got = IEJoin.join(a, b, col("a_x"), "<", col("b_x"), lit(true), buckets = 2)
       .select(col("a_key"), col("b_key")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 10L))) // 1.0 < 2.0 only; nulls drop out
@@ -68,7 +68,7 @@ class IEJoinSpec extends SparkSpec {
         s"CASE WHEN id % 13 = 0 THEN CAST(NULL AS DOUBLE) " +
           s"WHEN id % 5 = 0 THEN 42.0 ELSE CAST(xxhash64(id + 1000, $seed) % 50 AS DOUBLE) END AS b_x")
       Seq("<", "<=", ">", ">=").foreach { op =>
-        val grid = IEJoin.join(a, b, col("a_x"), op, col("b_x"), buckets = 5)
+        val grid = IEJoin.join(a, b, col("a_x"), op, col("b_x"), lit(true), buckets = 5)
           .select(col("a_key"), col("b_key"))
         val pred = op match {
           case "<"  => col("a_x") < col("b_x")

@@ -278,34 +278,6 @@ class LazyFrameSpec extends SparkSpec {
     }
   }
 
-  test("joinSalted equals the plain join on a skewed key") {
-    // 90% of rows share one key — the shape that hot-spots one reducer
-    val big = LazyFrame((1 to 1000).map(i => (if (i <= 900) "hot" else s"k$i", i))
-      .toDF("k", "i"))
-    val dim = LazyFrame(Seq(("hot", 1.0), ("k950", 2.0)).toDF("k", "w"))
-    val plain = big.join(dim, Seq("k")).collect()
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
-    val salted = big.joinSalted(dim, Seq("k"), salt = 8).collect()
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
-    assert(salted == plain && plain.size == 901)
-    // left join keeps unmatched left rows exactly once
-    assert(big.joinSalted(dim, Seq("k"), salt = 8, how = "left").count() == 1000)
-  }
-
-  test("joinSalted rejects right/full outer (right side is salt-replicated)") {
-    val l = LazyFrame(Seq(("a", 1)).toDF("k", "i"))
-    val r = LazyFrame(Seq(("b", 2.0)).toDF("k", "w"))
-    for (how <- Seq("right", "full", "full_outer", "rightouter")) {
-      val e = intercept[IllegalArgumentException](l.joinSalted(r, Seq("k"), 4, how))
-      assert(e.getMessage.contains("joinSalted supports"), how)
-    }
-    // a pre-existing __salt column must not collide
-    val withSalt = LazyFrame(Seq(("a", 7)).toDF("k", "__salt"))
-    val dim = LazyFrame(Seq(("a", 1.0)).toDF("k", "w"))
-    val out = withSalt.joinSalted(dim, Seq("k"), 4).collect()
-    assert(out.columns.toSeq == Seq("k", "__salt", "w") && out.count() == 1)
-  }
-
   test("profile() returns executed per-operator metrics") {
     val p = lf.groupByNames("k").agg(sum(col("v")).as("sv")).profile()
     val byNode = p.collect().map(r =>

@@ -78,12 +78,13 @@ class PlanSerdeSpec extends SparkSpec {
 
   // ---- graft operators (r12 verdict task 5) ------------------------------
 
+  private val events = Select(Scan("parquet", s"$sf/events.parquet"),
+    Seq("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id % 3 AS grp"))
+  private val marks = Select(Scan("parquet", s"$sf/events.parquet"),
+    Seq("CAST(ts AS TIMESTAMP) AS mark_ts", "user_id % 3 AS grp",
+      "value AS mark_value"))
+
   test("as-of join round-trips (backward, by-keyed, with tolerance)") {
-    val events = Select(Scan("parquet", s"$sf/events.parquet"),
-      Seq("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id % 3 AS grp"))
-    val marks = Select(Scan("parquet", s"$sf/events.parquet"),
-      Seq("CAST(ts AS TIMESTAMP) AS mark_ts", "user_id % 3 AS grp",
-        "value AS mark_value"))
     roundTrips(
       AsOfJoin(events, marks, "ts", "mark_ts", by = Seq("grp"),
         strategy = "backward"))
@@ -91,8 +92,27 @@ class PlanSerdeSpec extends SparkSpec {
       AsOfJoin(events, marks, "ts", "mark_ts", by = Seq("grp"),
         // tolerance rides in the key's natural comparison units (the
         // graft.ops.AsOf contract) — epoch seconds for timestamps
-        strategy = "nearest", tolerance = Some("7200.0"),
-        rangedBy = true))
+        strategy = "nearest", tolerance = Some("7200.0")))
+  }
+
+  test("an as-of plan written with the removed rangedBy field still builds") {
+    // toJson output of the nearest plan above from before AsOfJoin lost its
+    // `rangedBy` flag (a second, opt-in by-keyed matcher). json4s ignores
+    // the unknown field, so the plan builds the keyed-window as-of.
+    val json = s"""{"jsonClass":"PlanSerde$$AsOfJoin","left":{"jsonClass":"PlanSerde$$Select","child":{"jsonClass":"PlanSerde$$Scan","format":"parquet","path":"$sf/events.parquet","options":{}},"exprs":["event_id","CAST(ts AS TIMESTAMP) AS ts","user_id % 3 AS grp"]},"right":{"jsonClass":"PlanSerde$$Select","child":{"jsonClass":"PlanSerde$$Scan","format":"parquet","path":"$sf/events.parquet","options":{}},"exprs":["CAST(ts AS TIMESTAMP) AS mark_ts","user_id % 3 AS grp","value AS mark_value"]},"leftOn":"ts","rightOn":"mark_ts","by":["grp"],"strategy":"nearest","tolerance":"7200.0","rangedBy":true}"""
+    val plan = PlanSerde.fromJson(json)
+    assert(plan == AsOfJoin(events, marks, "ts", "mark_ts", by = Seq("grp"),
+      strategy = "nearest", tolerance = Some("7200.0")))
+    val df = PlanSerde.build(spark, plan)
+    // row count, order-free row hash and matched count of this plan as
+    // both as-of matchers computed them before the flag was removed
+    val digest = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")),
+      count(col("mark_value"))).collect()(0)
+    assert(df.columns.toSeq == Seq("grp", "event_id", "ts", "mark_ts", "mark_value"))
+    assert(digest.getLong(0) == 1000L && digest.getLong(2) == 1000L, digest)
+    assert(digest.getDecimal(1) == new java.math.BigDecimal("-25721222425903565805"),
+      digest)
   }
 
   test("inequality join round-trips through the grid-partitioned IEJoin") {

@@ -295,20 +295,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("graft_ndv"), s"expected the graft_ndv aggregate:\n$p")
   }
 
-  test("joinSalted plans the salt: hashed left, exploded right replication, salt in keys") {
-    val l = graft.dsl.LazyFrame(spark.range(1000)
-      .select((col("id") % 3).as("k"), col("id").as("v")))
-    val r = graft.dsl.LazyFrame(spark.range(300)
-      .select((col("id") % 3).as("k"), col("id").as("w")))
-    val p = planOf(l.joinSalted(r, Seq("k"), salt = 8).df)
-    assert(p.contains("xxhash64"),
-      s"left salt must be a deterministic row hash (not rand()):\n$p")
-    assert(p.contains("Generate") || p.contains("explode"),
-      s"right side must replicate via explode(sequence):\n$p")
-    assert(p.contains("__salt"),
-      s"the salt column must join both sides:\n$p")
-  }
-
   test("bottomK plans as TakeOrderedAndProject, same as topK") {
     val cust = graft.dsl.LazyFrame(spark.read.parquet(s"$sf/customer.parquet"))
     val p = planOf(cust.bottomK(10, col("c_acctbal"), col("c_custkey")).df)

@@ -69,8 +69,16 @@ object Reference {
       (bit, i) => call_function("shiftleft", bit, i)), lit(0L), (acc, v) => acc + v)
   }
 
+  /** [[graft.functions.dotProduct]]: element products as doubles, summed
+    * left to right from 0.0. Null when either array is null, holds a null
+    * or is shorter than the other (zip_with pads with nulls); 0.0 for two
+    * empty arrays. */
+  def dotProductHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   /** [[graft.functions.cosineSimilarity]]: three HOF passes. */
   def cosineSimilarityHof(a: Column, b: Column): Column =
-    graft.functions.dotProductHof(a, b) /
+    dotProductHof(a, b) /
       (graft.functions.l2Norm(a) * graft.functions.l2Norm(b))
 }

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards for the one session factory ([[GraftSession]]): no other file
   * under `src/` builds a session, `src/main` reads no session conf or
   * environment variable beyond a fixed set and declares no main beyond a
-  * fixed set, and the mains whose records
-  * are compared across rounds (`Bench`, `Verify`) run under exactly the
-  * confs they ran under before the factory existed, plus
+  * fixed set, the DSL adds no broadcast hint of its own, and the mains
+  * whose records are compared across rounds (`Bench`, `Verify`) run under
+  * exactly the confs they ran under before the factory existed, plus
   * [[GraftExtensions]]. */
 class SessionSpec extends AnyFunSuite {
 
@@ -46,6 +46,21 @@ class SessionSpec extends AnyFunSuite {
       .filter(p => p.toString.endsWith(".scala"))
       .flatMap(p => pattern.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")))
       .map(_.group(1)).toSet
+  }
+
+  test("the DSL takes no per-call broadcast hint") {
+    // which join side broadcasts is graft.plans.BroadcastBySize's decision
+    // (with Spark's threshold), made once per query for every join API
+    val call = "\\bbroadcast\\s*\\(".r
+    val dsl = repoRoot.resolve("src/main/scala/graft/dsl")
+    val hits = Files.walk(dsl).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex
+          .filter { case (line, _) => call.findFirstIn(line).isDefined }
+          .map { case (_, i) => s"${dsl.relativize(p)}:${i + 1}" }
+      }.toList
+    assert(hits.isEmpty, hits)
   }
 
   test("no new session confs or environment variables are read") {

@@ -26,7 +26,7 @@ class VectorExprSpec extends SparkSpec {
   test("native dot equals HOF dot bit-for-bit (incl. null/empty/mismatch)") {
     val rows = vecs.select(col("id"),
       gf.dotProduct(col("a"), col("b")).as("native"),
-      gf.dotProductHof(col("a"), col("b")).as("hof")).collect()
+      Reference.dotProductHof(col("a"), col("b")).as("hof")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null-ness mismatch id=${r.getInt(0)}")
       if (!r.isNullAt(1)) {

@@ -735,20 +735,19 @@ object PlanFuzz {
         // an ANSI emulation — a non-equi correlated scalar picks the
         // matched key, a LEFT JOIN back fetches the payload (right is
         // GROUP BY-unique on (by, rk), so the re-join never multiplies) —
-        // vs the model's per-row scan. Three DSL variants share the one
-        // emulation: keyless (boundary-carry path), by-keyed on the
+        // vs the model's per-row scan. Two DSL variants share the one
+        // emulation: keyless (boundary-carry path) and by-keyed on the
         // collision-rich nullable k1 (keyed-window path; a NULL by-key
-        // forms a matchable group on all three paths — partitionBy groups
-        // nulls, SQL uses <=>, the model groups by canon), and by-keyed
-        // with rangedBy=true (the skew-proof range-partitioned carry,
-        // previously only property-spec'd — results must be identical to
-        // the keyed window's). rid need not be unique here (post-join
-        // duplicates are fine); only PRESENCE is required, hence the gate.
+        // forms a matchable group on every side — partitionBy groups
+        // nulls, SQL uses <=>, the model groups by canon). rid need not be
+        // unique here (post-join duplicates are fine); only PRESENCE is
+        // required, hence the gate.
         val strat = rnd.nextInt(3) // 0=backward, 1=forward, 2=nearest (r18)
         val backward = strat == 0
         val nearest = strat == 2
         val useBy = schema.exists(_.name == "k1") && rnd.nextBoolean()
-        val rangedBy = useBy && rnd.nextBoolean()
+        // draw kept from a deleted by-keyed variant so each seed keeps its plan
+        if (useBy) rnd.nextBoolean()
         val rSql =
           if (useBy) "(SELECT k1, k0 AS rk, CAST(COUNT(*) AS BIGINT) AS rv " +
             "FROM fz_t1 WHERE k0 IS NOT NULL GROUP BY k1, k0)"
@@ -785,7 +784,7 @@ object PlanFuzz {
         df = graft.dsl.LazyFrame(df).joinAsof(graft.dsl.LazyFrame(right),
           "rid", "rk", if (useBy) Seq("k1") else Nil,
           if (nearest) "nearest" else if (backward) "backward" else "forward",
-          None, rangedBy).df
+          None).df
         // right lookup: (by-group canon, rk) -> count; keyless uses a
         // single "" group
         val rmap: Map[(Any, Long), Long] = m1.filter(_("k0") != null)
