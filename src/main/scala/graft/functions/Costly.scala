@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Levenshtein}
 /** Marks a per-row kernel whose evaluation costs far more than reading the
   * row: a tokenizer, a hash ladder, a vector product, an edit distance.
   * This is graft's one cost class. The planner uses it to avoid running
-  * such a kernel twice ([[graft.plans.SampleMaterializedSortInput]]);
+  * such a kernel twice ([[graft.plans.GlobalSortInput]]);
   * anything else that has to tell cheap work from costly work should read
   * the same mark rather than keep its own list. Mark a kernel only once a
   * workload measures it as dearer than what the mark makes the planner add

@@ -106,13 +106,39 @@ class PlanSerdeSpec extends SparkSpec {
     val df = PlanSerde.build(spark, plan)
     // row count, order-free row hash and matched count of this plan as
     // both as-of matchers computed them before the flag was removed
-    val digest = df.agg(count(lit(1)),
+    val d = digest(df)
+    assert(df.columns.toSeq == Seq("grp", "event_id", "ts", "mark_ts", "mark_value"))
+    assert(d == ((1000L, new java.math.BigDecimal("-25721222425903565805"), 1000L)), d)
+  }
+
+  /** An as-of join's row count, order-free row hash (a sum of `xxhash64`)
+    * and matched count (rows with a non-null right side). */
+  private def digest(df: org.apache.spark.sql.DataFrame): (Long, java.math.BigDecimal, Long) = {
+    val r = df.agg(count(lit(1)),
       sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")),
       count(col("mark_value"))).collect()(0)
-    assert(df.columns.toSeq == Seq("grp", "event_id", "ts", "mark_ts", "mark_value"))
-    assert(digest.getLong(0) == 1000L && digest.getLong(2) == 1000L, digest)
-    assert(digest.getDecimal(1) == new java.math.BigDecimal("-25721222425903565805"),
-      digest)
+    (r.getLong(0), r.getDecimal(1), r.getLong(2))
+  }
+
+  test("as-of join round-trips when the right side is other rows") {
+    // 'error' marks against 'click' events: unlike `marks` above, no left
+    // row can match itself, so the match rate and the rows depend on the
+    // strategy and the tolerance
+    val clicks = Select(Filter(Scan("parquet", s"$sf/events.parquet"), "event_type = 'click'"),
+      Seq("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id % 3 AS grp"))
+    val errors = Select(Filter(Scan("parquet", s"$sf/events.parquet"), "event_type = 'error'"),
+      Seq("CAST(ts AS TIMESTAMP) AS mark_ts", "user_id % 3 AS grp", "value AS mark_value"))
+    def asOf(strategy: String, tolerance: Option[String]) =
+      AsOfJoin(clicks, errors, "ts", "mark_ts", by = Seq("grp"),
+        strategy = strategy, tolerance = tolerance)
+    val plan = asOf("nearest", Some("7200.0"))
+    roundTrips(plan)
+    // every click row, 67 of them matched; a change to the as-of matcher
+    // or to the serde that moves a match shows in these literals
+    val d = digest(PlanSerde.build(spark, plan))
+    assert(d == ((210L, new java.math.BigDecimal("12192300804723875907"), 67L)), d)
+    assert(digest(PlanSerde.build(spark, asOf("backward", Some("7200.0")))) != d)
+    assert(digest(PlanSerde.build(spark, asOf("nearest", Some("600.0")))) != d)
   }
 
   test("inequality join round-trips through the grid-partitioned IEJoin") {
