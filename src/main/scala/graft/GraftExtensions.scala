@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   *  - [[graft.plans.BroadcastBySize]], the pre-CBO optimizer rule that
   *    broadcasts a join side small next to the other, for every join the
   *    optimizer sees (DataFrame, SQL and LazyFrame);
+  *  - [[graft.plans.CostlyOncePerRow]], the pre-CBO optimizer rule that
+  *    computes a [[graft.functions.Costly]] kernel a projection uses more
+  *    than once in a child projection, so it runs once per row;
   *  - [[graft.plans.GlobalSortInput]], the query-stage preparation rule
   *    that decides a global sort's input: a sort whose input runs as one
   *    task sorts inside that task (no sampling job, no range shuffle);
@@ -21,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     (graft.functions.GraftFunctions.all ++ graft.functions.PolarsSqlShims.all)
       .foreach(ext.injectFunction)
     ext.injectPreCBORule(_ => graft.plans.BroadcastBySize)
-    ext.injectQueryStagePrepRule(graft.plans.GlobalSortInput)
+    ext.injectPreCBORule(_ => graft.plans.CostlyOncePerRow)
+    ext.injectQueryStagePrepRule(graft.plans.GlobalSortInput(_))
   }
 }

@@ -66,6 +66,12 @@ object GraftFunctions {
         require(args.length == 2, "graft_shingles(text, w)")
         ShinglesExpr(args.head, intLit(args(1), "graft_shingles", "w"))
       }),
+    (FunctionIdentifier("graft_levenshtein"),
+      new ExpressionInfo(classOf[LevenshteinExpr].getName, "graft_levenshtein"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, "graft_levenshtein(a, b)")
+        LevenshteinExpr(args.head, args(1))
+      }),
     (FunctionIdentifier("graft_text_stats"),
       new ExpressionInfo(classOf[TextStatsExpr].getName, "graft_text_stats"),
       (args: Seq[Expression]) => {

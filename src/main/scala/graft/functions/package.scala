@@ -499,6 +499,14 @@ package object functions {
     Bridge.column(TextStatsExpr(Bridge.expression(text)))
   }
 
+  /** Spark's `levenshtein(a, b)` as a bit-parallel native kernel
+    * ([[LevenshteinExpr]], SQL `graft_levenshtein`): the same integer in
+    * O(⌈m/64⌉·n) word operations instead of m·n cells. */
+  def editDistance(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(LevenshteinExpr(Bridge.expression(a), Bridge.expression(b)))
+  }
+
   /** The shared whitespace token convention as a native one-pass kernel
     * (lowercase → split on `\s+` → drop empties; [[TokensExpr]]).
     * Byte-identical to the reference formulation

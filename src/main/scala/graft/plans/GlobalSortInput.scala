@@ -1,11 +1,13 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SortExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, PartitionedFileUtil, SortExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, BroadcastQueryStageExec, CoalesceShufflePartitions, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FilePartition}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
 
 import graft.functions.Costly
@@ -89,7 +91,7 @@ case class GlobalSortInput(session: SparkSession) extends Rule[SparkPlan] {
     case s: FileSourceScanExec =>
       // a dynamic partition filter selects files only at run time
       !s.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) &&
-        s.inputRDD.getNumPartitions == 1
+        GlobalSortInput.splits(s) == 1
     case _: UnionExec => false
     case p => p.children.forall(oneTask)
   }
@@ -98,4 +100,35 @@ case class GlobalSortInput(session: SparkSession) extends Rule[SparkPlan] {
     case _: Exchange | _: QueryStageExec => false
     case p => p.expressions.exists(_.exists(Costly(_))) || p.children.exists(stageIsCostly)
   }
+}
+
+object GlobalSortInput {
+
+  /** The number of tasks `scan` runs, counted as `FileSourceScanExec.inputRDD`
+    * splits its selected files (`FilePartition`'s split math) but without
+    * building that RDD: building it builds the file format's reader, which
+    * broadcasts the Hadoop configuration, and every adaptive re-plan makes
+    * fresh scan nodes that would each build one again. */
+  private[graft] def splits(scan: FileSourceScanExec): Int =
+    if (scan.bucketedScan)
+      scan.optionalNumCoalescedBuckets.getOrElse(scan.relation.bucketSpec.get.numBuckets)
+    else {
+      val relation = scan.relation
+      val session = relation.sparkSession
+      val listing = scan.selectedPartitions
+      val maxSplitBytes = FilePartition.maxSplitBytes(session, listing)
+      val keep: Path => Boolean = scan.optionalBucketSet match {
+        case Some(buckets) if session.sessionState.conf.bucketingEnabled =>
+          path => BucketingUtils.getBucketId(path.getName).forall(buckets.get)
+        case _ => _ => true
+      }
+      val files = listing.filePartitionIterator.flatMap { part =>
+        part.files.filter(f => keep(f.getPath)).flatMap { f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            relation.fileFormat.isSplitable(session, relation.options, f.getPath),
+            maxSplitBytes, part.values)
+        }
+      }.toSeq.sortBy(_.length)(Ordering[Long].reverse)
+      FilePartition.getFilePartitions(session, files, maxSplitBytes).size
+    }
 }

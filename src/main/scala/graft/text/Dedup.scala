@@ -360,10 +360,13 @@ object Dedup {
     * (1 − lev/maxlen) on a length-capped text prefix instead of shingle
     * Jaccard — the verify used when token reordering should NOT count as
     * similar (boilerplate detection, template spam). Scale shape: edit
-    * distance is O(len²) per pair, so it only ever runs on LSH candidate
-    * pairs (never all-pairs) and on a `capChars` prefix (> 0) that bounds
-    * the worst case; Spark's `levenshtein` is codegen'd. Pairs where both
-    * prefixes are empty have no defined similarity and are dropped.
+    * distance is the bit-parallel [[graft.functions.LevenshteinExpr]]
+    * (Spark's `levenshtein` integer in O(⌈len/64⌉·len) word operations per
+    * pair, 7·len at the default 400-character cap, where Spark's fills
+    * len² cells), and it only ever runs on LSH candidate pairs (never
+    * all-pairs) and on a `capChars` prefix (> 0) that bounds the worst
+    * case. Pairs where both prefixes are empty have no defined similarity
+    * and are dropped.
     * The verify shape is picked as on [[nearDuplicates]]: under `rescan`
     * the prefix side is semi-filtered to candidate ids (persisted pairs +
     * eager count + broadcast-hinted id set) so the full corpus's text
@@ -388,7 +391,7 @@ object Dedup {
       .join(txt.select(col(idCol).as("id_b"), col("__t").as("__tb")), Seq("id_b"))
       .withColumn("edit_sim", when(denom > 0,
         round((lit(1.0) -
-          levenshtein(col("__ta"), col("__tb")).cast("double") / denom) * 1e4) / 1e4))
+          graft.functions.editDistance(col("__ta"), col("__tb")).cast("double") / denom) * 1e4) / 1e4))
       .filter(col("edit_sim") >= threshold)
       .select("id_a", "id_b", "edit_sim")
   }

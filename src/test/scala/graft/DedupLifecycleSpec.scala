@@ -96,6 +96,10 @@ class DedupLifecycleSpec extends SparkSpec {
     assert(nearRc.exists(p => p._1 == 5L && p._2 == 9L), nearRc)
     assert(nearRc.exists(p => p._1 == 5L && p._2 == 6L), nearRc)
     assert(fuzzyRc.exists(p => p._1 == 5L && p._2 == 9L), fuzzyRc)
+    // the bit-parallel edit distance gives the pairs Spark's `levenshtein` gives
+    val sparkLev = pairs(Reference.fuzzyNearDuplicatesSpark(recomputeIn, "doc_id", "text",
+      w = 3, k = 8, b = 4, threshold = 0.5))
+    assert(fuzzyRc == sparkLev, s"fuzzy pairs: graft=$fuzzyRc spark=$sparkLev")
   }
 
   test("local mode ignores cluster executor confs for the auto budget") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference formulations of graft's native text and vector kernels as
@@ -81,4 +81,23 @@ object Reference {
   def cosineSimilarityHof(a: Column, b: Column): Column =
     dotProductHof(a, b) /
       (graft.functions.l2Norm(a) * graft.functions.l2Norm(b))
+
+  /** [[graft.text.Dedup.fuzzyNearDuplicates]] verified with Spark's
+    * `levenshtein` instead of the bit-parallel kernel, over the same
+    * MinHash candidates (prefixes joined directly, the `recompute` shape). */
+  def fuzzyNearDuplicatesSpark(df: DataFrame, idCol: String, textCol: String,
+                               w: Int, k: Int, b: Int, threshold: Double,
+                               capChars: Int = 400): DataFrame = {
+    val cands = graft.text.Dedup.minhashCandidates(df, idCol, textCol, w, k, b)
+    val txt = df.select(col(idCol), substring(col(textCol), 1, capChars).as("__t"))
+    val denom = greatest(length(col("__ta")), length(col("__tb")))
+    cands
+      .join(txt.select(col(idCol).as("id_a"), col("__t").as("__ta")), Seq("id_a"))
+      .join(txt.select(col(idCol).as("id_b"), col("__t").as("__tb")), Seq("id_b"))
+      .withColumn("edit_sim", when(denom > 0,
+        round((lit(1.0) -
+          levenshtein(col("__ta"), col("__tb")).cast("double") / denom) * 1e4) / 1e4))
+      .filter(col("edit_sim") >= threshold)
+      .select("id_a", "id_b", "edit_sim")
+  }
 }

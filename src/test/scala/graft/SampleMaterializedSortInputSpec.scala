@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
-import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, InputAdapter, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
@@ -19,9 +19,11 @@ import graft.plans.GlobalSortInput
 import graft.sources.ParquetMeta
 
 /** Identity on its child, marked costly, counting every evaluation in
-  * `evals` (one add per row, on whichever task evaluates it). */
-case class CountedKernel(child: Expression, evals: LongAccumulator)
+  * `evals` (one add per row, on whichever task evaluates it). With
+  * `stable = false` it declares itself nondeterministic. */
+case class CountedKernel(child: Expression, evals: LongAccumulator, stable: Boolean = true)
     extends UnaryExpression with CodegenFallback with Costly {
+  override lazy val deterministic: Boolean = stable && child.deterministic
   override def dataType: DataType = child.dataType
   override protected def nullSafeEval(v: Any): Any = { evals.add(1); v }
   override protected def withNewChildInternal(c: Expression): CountedKernel =
@@ -208,6 +210,25 @@ class SampleMaterializedSortInputSpec extends SparkSpec with AdaptiveSparkPlanHe
       val t = spark.read.parquet(dir).select(col("id"), col("k"))
       assert(t.rdd.getNumPartitions > 1)
       assertSortsLikeScala(t)(p => rangeExchanges(p) == 1 && sortedInTask(p) == 0)
+    }
+  }
+
+  test("a scan's split count equals its input RDD's partition count") {
+    def same(df: DataFrame): Int = {
+      val scan = df.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      val n = GlobalSortInput.splits(scan)
+      assert(n == scan.inputRDD.getNumPartitions, df.queryExecution.sparkPlan)
+      n
+    }
+    val parted = Files.createTempDirectory("graft-sort-input").resolve("p").toString
+    spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 4).as("p"))
+      .write.partitionBy("p").parquet(parted)
+    assert(same(spark.read.parquet(keyedFile(None))) == 1)
+    same(spark.read.parquet(parted))
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "8192") {
+      assert(same(spark.read.parquet(keyedFile(Some(8192L)))) > 1)
+      assert(same(spark.read.parquet(parted)) > 1)
+      assert(same(spark.read.parquet(parted).where(col("p") === 1)) > 1)
     }
   }
 

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import graft.GraftSession
+import graft.functions.Costly
 
 /** Plan-shape sweep over the WHOLE declared-query inventory (r21 opt round):
   * plans every SparkEntry key (no execution) and emits one CSV row per key
@@ -12,7 +13,9 @@ import graft.GraftSession
   * flagged), scans whose ReadSchema is wider than 12 columns, scans with a
   * Filter directly above but no PushedFilters, and interpreted (non-codegen)
   * eval markers. The checklist in OPTIMIZATION_r21.md is generated from this
-  * sweep.
+  * sweep. `costly_calls` counts the [[graft.functions.Costly]] kernel
+  * calls in the optimized plan, so that two sweeps tell on which keys a
+  * change moved kernel work.
   *
   * Usage: sbt "Test/runMain graft.testing.PlanSweep <outCsv> [sfDir]"
   * (a test-scope runner: the library ships no test harness).
@@ -40,7 +43,7 @@ object PlanSweep {
 
     val sb = new StringBuilder(
       "key,exchanges,sorts,smj,bhj,shj,bnlj,cartesian,generate,window," +
-        "inmemory,unpushed_scan_filters,wide_scans,err\n")
+        "inmemory,unpushed_scan_filters,wide_scans,costly_calls,err\n")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("stream_"))
     names.foreach { name =>
@@ -61,14 +64,17 @@ object PlanSweep {
           l.contains("ReadSchema: struct<") &&
             l.substring(l.indexOf("ReadSchema")).count(_ == ',') >= 12
         }
+        val optimized = df.queryExecution.optimizedPlan
+        val costly = optimized.collect { case p =>
+          p.expressions.map(_.collect { case e if Costly(e) => e }.size).sum }.sum
         sb.append(s"$name,${c("Exchange")},${c("Sort ")},${c("SortMergeJoin")}," +
           s"${c("BroadcastHashJoin")},${c("ShuffledHashJoin")}," +
           s"${c("BroadcastNestedLoopJoin")},${c("CartesianProduct")}," +
           s"${c("Generate")},${c("Window")},${c("InMemoryRelation")}," +
-          s"$unpushed,$wideScans,\n")
+          s"$unpushed,$wideScans,$costly,\n")
       } catch {
         case e: Throwable =>
-          sb.append(s"$name,,,,,,,,,,,,,${e.getClass.getSimpleName}\n")
+          sb.append(s"$name,,,,,,,,,,,,,,${e.getClass.getSimpleName}\n")
       }
     }
     Files.write(Paths.get(outCsv), sb.toString.getBytes(StandardCharsets.UTF_8))
